@@ -31,6 +31,8 @@ import shutil
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
+from ..sources.tables import rows_to_dataframe
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
@@ -80,7 +82,7 @@ def file_report(
         "partition string, files bigint, bytes bigint, "
         "avg_file_bytes bigint, needs_compaction boolean"
     )
-    return spark.createDataFrame(rows, schema)
+    return rows_to_dataframe(spark, rows, schema)
 
 
 def compact(
@@ -145,8 +147,8 @@ def missing_partitions(
         )
         for p in sorted(expected)
     ]
-    return spark.createDataFrame(
-        rows, "partition string, present boolean, files bigint, bytes bigint"
+    return rows_to_dataframe(
+        spark, rows, "partition string, present boolean, files bigint, bytes bigint"
     )
 
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.bpe import PRETOKEN_PATTERN, learn_bpe
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, rows_to_dataframe, spread
 from .core import REGISTRY
 
 N_MERGES = 24
@@ -106,7 +106,8 @@ def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trains on a cache miss, then persists — the encoder query and
     # any later consumer read the artifact instead of retraining
     merges = learned_merges_artifact(spark, sf_dir)
-    return spark.createDataFrame(
+    return rows_to_dataframe(
+        spark,
         [
             (i, left, right, freq)
             for i, (left, right, freq) in enumerate(merges)

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, rows_to_dataframe, spread
 from .core import REGISTRY
 
 #: sketch geometry: D hash rows x W buckets (tiny on purpose so the
@@ -324,6 +324,6 @@ def stream_cms_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # telemetry, not part of the compared result)
     stream_cms_equality.last_fold_batches = len(folded_batches)  # type: ignore[attr-defined]
     data = sorted((r, b, c) for (r, b), c in grid.items())
-    return spark.createDataFrame(
-        data, "r int, b long, cnt long"
+    return rows_to_dataframe(
+        spark, data, "r int, b long, cnt long"
     ).orderBy(F.asc("r"), F.asc("b"))

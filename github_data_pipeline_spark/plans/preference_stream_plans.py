@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import cents_of
-from ..sources.tables import load_table
+from ..sources.tables import load_table, rows_to_dataframe
 from .core import REGISTRY
 from .preference_plans import _bt_oracle, bt_from_user_type_sums
 
@@ -139,7 +139,8 @@ def stream_bt_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_bt_equality.last_multibatch_keys = sum(  # type: ignore[attr-defined]
         1 for c in updates_per_key.values() if c >= 2
     )
-    ut = spark.createDataFrame(
+    ut = rows_to_dataframe(
+        spark,
         [(u, t, v) for (u, t), v in sorted(state.items())],
         "user_id long, event_type string, v long",
     )

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.incremental import scd2_merge
-from ..sources.tables import load_table
+from ..sources.tables import load_table, rows_to_dataframe
 from .core import REGISTRY
 
 _add = REGISTRY.add
@@ -96,7 +96,8 @@ def scd2_order_priority_history(
     cut = F.lit(SPLIT_DATE).cast("timestamp")
     b1 = base.filter(F.col("o_orderdate") < cut)
     b2 = base.filter(F.col("o_orderdate") >= cut)
-    empty = spark.createDataFrame(
+    empty = rows_to_dataframe(
+        spark,
         [],
         T.StructType(
             [

@@ -15,8 +15,10 @@ from __future__ import annotations
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .. import schemas
+from .tables import rows_to_dataframe
 
 REPO = "owner/repo"
 
@@ -356,44 +358,30 @@ def _blame_rows() -> list[dict]:
     ]
 
 
-def load_fixtures(spark: SparkSession) -> dict[str, DataFrame]:
-    """Build the full fixture set as DataFrames with the typed schemas."""
-    from pyspark.sql.types import StructType
-
+def fixture_rows() -> dict[str, tuple[list, StructType | str]]:
+    """The fixture set as ``{table: (rows, schema)}``, before any Spark."""
     # raw API shape: repo_name not yet stamped (normalize_repo_meta
     # derives it), so the column is absent entirely
     repo_meta_raw_schema = StructType(
         [f for f in schemas.REPO_META.fields if f.name != "repo_name"]
     )
     return {
-        "repo_meta_raw": spark.createDataFrame(
-            _repo_meta_raw_rows(), schema=repo_meta_raw_schema
-        ),
-        "contributors": spark.createDataFrame(
-            _contributor_rows(), schema=schemas.CONTRIBUTORS
-        ),
-        "issue_comments": spark.createDataFrame(
-            _issue_comment_rows(), schema=schemas.ISSUE_COMMENTS
-        ),
-        "issues_raw": spark.createDataFrame(
-            _issues_rows(), schema=schemas.ISSUES
-        ),
-        "pull_requests": spark.createDataFrame(
-            _pr_rows(), schema=schemas.PULL_REQUESTS
-        ),
-        "commits_raw": spark.createDataFrame(
-            _commit_rows(), schema=schemas.COMMITS
-        ),
-        "pr_commits": spark.createDataFrame(
-            _PR_COMMITS, schema=PR_COMMITS_SCHEMA
-        ),
-        "target_details": spark.createDataFrame(
-            _TARGET_DETAILS, schema=TARGET_DETAILS_SCHEMA
-        ),
-        "external_issue_authors": spark.createDataFrame(
-            _EXTERNAL_AUTHORS, schema=EXTERNAL_AUTHORS_SCHEMA
-        ),
-        "blame_ranges": spark.createDataFrame(
-            _blame_rows(), schema=schemas.BLAME_RANGE_INPUT
-        ),
+        "repo_meta_raw": (_repo_meta_raw_rows(), repo_meta_raw_schema),
+        "contributors": (_contributor_rows(), schemas.CONTRIBUTORS),
+        "issue_comments": (_issue_comment_rows(), schemas.ISSUE_COMMENTS),
+        "issues_raw": (_issues_rows(), schemas.ISSUES),
+        "pull_requests": (_pr_rows(), schemas.PULL_REQUESTS),
+        "commits_raw": (_commit_rows(), schemas.COMMITS),
+        "pr_commits": (_PR_COMMITS, PR_COMMITS_SCHEMA),
+        "target_details": (_TARGET_DETAILS, TARGET_DETAILS_SCHEMA),
+        "external_issue_authors": (_EXTERNAL_AUTHORS, EXTERNAL_AUTHORS_SCHEMA),
+        "blame_ranges": (_blame_rows(), schemas.BLAME_RANGE_INPUT),
+    }
+
+
+def load_fixtures(spark: SparkSession) -> dict[str, DataFrame]:
+    """Build the full fixture set as DataFrames with the typed schemas."""
+    return {
+        name: rows_to_dataframe(spark, rows, schema)
+        for name, (rows, schema) in fixture_rows().items()
     }

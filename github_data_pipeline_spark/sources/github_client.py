@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import random
 import time
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import parse_qsl, urlencode, urlparse, urlunparse
@@ -286,16 +286,6 @@ class GithubClient:
             for t in tree
             if t.get("type") == "blob" and t.get("path")
         ]
-
-
-def rows_to_dataframe(spark, rows: Iterable[dict], schema):
-    """Driver-side fetch -> typed DataFrame (the small-result path).
-
-    For large backfills, distribute instead: build a DataFrame of page
-    ranges / entity keys and fan the client out via mapInPandas with a
-    per-token concurrency bound — never per-row HTTP (SURVEY §2.1).
-    """
-    return spark.createDataFrame(list(rows), schema=schema)
 
 
 def requests_transport(timeout: float = 30.0) -> Transport:

@@ -28,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -64,12 +65,15 @@ TMP_ROOT = os.path.join(REPO, ".bench_scaled_tmp")
 def _scaled_dir(spark, factor: int, skew: str) -> str:
     """Build (or reuse — the c8 run reuses the c32 run's build) the
     factor-scaled input dir. Input-layout artifact only: replicated
-    rows of the SOURCE tables, no query results."""
+    rows of the SOURCE tables, no query results. Without the
+    ``_BUILT`` marker the dir is an interrupted build: it is removed
+    first, since the builder keeps any table path it finds."""
     from tools.scale_smoke import build_scaled_dir
 
     out = os.path.join(TMP_ROOT, f"f{factor}_{skew}")
     marker = os.path.join(out, "_BUILT")
     if not os.path.exists(marker):
+        shutil.rmtree(out, ignore_errors=True)
         build_scaled_dir(spark, "/root/testdata/sf0.1", factor, out, skew)
         with open(marker, "w"):
             pass
