@@ -5,6 +5,10 @@ The Spark analog of the reference's ``process_repo`` orchestration
 routing (``src/indexing/indexer.py:115-178``): normalization, derived
 datasets, canonical storage and a SQL view surface — but as a DAG of
 DataFrame transforms the scheduler parallelizes, not a serial loop.
+``write_repo_tables`` submits every table's write at once, one Python
+thread per table, so the small write jobs overlap on the executors;
+each thread inherits the caller's local properties (job group, call
+site, scheduler pool).
 
 A user of the reference maps their flow 1:1:
 
@@ -20,8 +24,10 @@ A user of the reference maps their flow 1:1:
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from .operators.blame import blame_file_rollup
 from .operators.ingest import enrich_commit_files, split_issues_feed
@@ -99,12 +105,33 @@ def process_repo(
 def write_repo_tables(
     tables: dict[str, DataFrame], base_dir: str
 ) -> dict[str, str]:
-    """Persist every produced table partitioned by repo_name."""
-    paths = {}
-    for name, df in tables.items():
-        path = os.path.join(base_dir, name)
-        write_table(df, path)
-        paths[name] = path
+    """Persist every produced table partitioned by repo_name.
+
+    The writes run as concurrent Spark jobs, one Python thread per
+    table, so their per-job fixed costs (planning, broadcasts, codegen,
+    file commits) overlap instead of queueing. Each thread runs under
+    its own ``inheritable_thread_target`` wrapper: the wrapper clones
+    the caller's local properties once, so a shared one would let one
+    write's SQL execution id leak into another's thread.
+
+    Returns ``{name: path}`` in ``tables`` order. On failure every write
+    still runs to completion and the first failure in table order is
+    raised; tables after it are written too. Each write overwrites its
+    own path, so a rerun converges.
+    """
+    if not tables:
+        return {}
+    spark = next(iter(tables.values())).sparkSession
+    paths = {name: os.path.join(base_dir, name) for name in tables}
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        futures = [
+            pool.submit(
+                inheritable_thread_target(spark)(write_table), df, paths[name]
+            )
+            for name, df in tables.items()
+        ]
+    for f in futures:
+        f.result()
     return paths
 
 

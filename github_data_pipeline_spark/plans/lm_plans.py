@@ -371,6 +371,10 @@ def lm_doc_typicality(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = docbi.groupBy("left_tok", "right_tok").agg(
         F.sum("dc").cast("long").alias("c")
     )
+    # For a materialization decision an unknown size (UNBOUNDED: the
+    # footprint cannot be read) means "assume large" and checkpoints;
+    # the opposite of the broadcast hints, where unknown means "hint
+    # off". tests/test_lm_plans.py pins this.
     if parquet_row_bound(sf_dir, "documents") >= LM_COUNTS_CKPT_MIN_DOCS:
         counts = counts.localCheckpoint()
     n_vocab = counts.count()

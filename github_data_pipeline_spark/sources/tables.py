@@ -50,19 +50,38 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: the INPUT FILES (metadata, never data; exactly the file-listing
 #: cache pattern of guide §6), so it is cached per (path, mtime) and
 #: handed to the reader, which skips inference; the scan itself still
-#: reads the parquet per execution. The mtime key invalidates on any
-#: rewrite; a StructType is plain Python, so the cache survives
-#: session restarts harmlessly.
+#: reads the parquet per execution. The mtime is the newest of the path
+#: and its direct children (``_tree_mtime_ns``), so a rewrite scoped to
+#: one partition directory invalidates too; a StructType is plain
+#: Python, so the cache survives session restarts harmlessly.
 _SCHEMA_CACHE: dict = {}
+
+
+def _tree_mtime_ns(path: str) -> int:
+    """Newest ``st_mtime_ns`` of ``path`` and its direct children.
+
+    A partition-scoped rewrite (dynamic overwrite of ``x=*/``) replaces
+    a child directory and need not touch the table root's own mtime.
+    0 when the path is missing."""
+    try:
+        newest = os.stat(path).st_mtime_ns
+    except OSError:
+        return 0
+    try:
+        with os.scandir(path) as entries:
+            for e in entries:
+                try:
+                    newest = max(newest, e.stat().st_mtime_ns)
+                except OSError:
+                    pass  # removed or a dangling link: not part of the table
+    except NotADirectoryError:
+        pass
+    return newest
 
 
 def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     key_path = os.path.abspath(path)
-    try:
-        mtime = os.stat(key_path).st_mtime_ns
-    except OSError:
-        mtime = 0
-    key = (key_path, mtime)
+    key = (key_path, _tree_mtime_ns(key_path))
     st = _SCHEMA_CACHE.get(key)
     if st is None:
         df = spark.read.parquet(path)

@@ -34,3 +34,17 @@ def duck(sf_dir):
     register_duckdb_views(con, sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def registry_explains(spark, sf_dir):
+    """Every registry entry built once and explained, by name
+    (``tools/plan_audit.explain_builder``). The registry-wide plan
+    audit and plan-property checks read these instead of each
+    rebuilding all entries."""
+    from github_data_pipeline_spark.plans import all_plans
+    from tools.plan_audit import explain_builder
+
+    return {
+        q.name: explain_builder(spark, q.builder, sf_dir) for q in all_plans()
+    }

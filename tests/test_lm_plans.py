@@ -96,3 +96,34 @@ def test_kn_probability_mass_bounded(spark, sf_dir):
         # the hard invariant is p_kn <= ml + lambda_max where
         # lambda_max = D * left_distinct / left_count <= 1
         assert r["p_kn_e9"] <= ml + lm_plans.KN_SCALE
+
+
+@pytest.mark.parametrize(
+    "row_bound, checkpoints",
+    [
+        (None, 2),  # footprint unreadable -> UNBOUNDED -> "assume large"
+        (lm_plans.LM_COUNTS_CKPT_MIN_DOCS - 1, 1),
+        (lm_plans.LM_COUNTS_CKPT_MIN_DOCS, 2),
+    ],
+)
+def test_typicality_vocab_checkpoint_gate(
+    spark, tmp_path, monkeypatch, row_bound, checkpoints
+):
+    """The per-doc bigram table is always checkpointed; the vocabulary
+    counts only when the corpus is known large OR of unknown size."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    real = DataFrame.localCheckpoint
+    calls = []
+
+    def counting(self, eager=True):
+        calls.append(self)
+        return real(self, eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    sdf = spark.createDataFrame(_HOSTILE)
+    monkeypatch.setattr(lm_plans, "load_table", lambda _s, _d, _t: sdf)
+    if row_bound is not None:
+        monkeypatch.setattr(lm_plans, "parquet_row_bound", lambda _d, _t: row_bound)
+    REG["lm_doc_typicality"].builder(spark, str(tmp_path / "missing"))
+    assert len(calls) == checkpoints

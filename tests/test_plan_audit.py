@@ -16,8 +16,8 @@ sys.path.insert(
 from plan_audit import audit_plan, run_audit  # noqa: E402
 
 
-def test_registry_has_no_plan_hazards(spark, sf_dir):
-    audits = run_audit(spark, sf_dir)
+def test_registry_has_no_plan_hazards(spark, sf_dir, registry_explains):
+    audits = run_audit(spark, sf_dir, explained=registry_explains)
     assert len(audits) >= 45  # every non-streaming registry entry
     bad = {a.name: a.hazards for a in audits if a.hazards}
     assert not bad, f"plan hazards: {bad}"
@@ -54,3 +54,20 @@ def test_audit_extracts_shape_metrics():
     assert a.joins == {"BroadcastHashJoin": 1, "SortMergeJoin": 1}
     assert a.scans == 1 and a.scan_widths == [2]
     assert a.codegen_spans == 2
+
+
+def test_plans_md_lists_every_python_stage():
+    from plan_audit import PYTHON_OUTSIDE_AUDIT, _render_markdown
+
+    audits = [
+        audit_plan("token_heavy_hitters", "MapInPandas f\n"),
+        audit_plan("seq_packing_manifest", "FlatMapGroupsInPandas f\n"),
+        audit_plan("orders_rollup", "HashAggregate\n"),
+    ]
+    md = _render_markdown(audits, "sf")
+    section = md[md.index("## Executor-side Python stages"):]
+    assert "| MapInPandas | token_heavy_hitters |" in section
+    assert "| FlatMapGroupsInPandas | seq_packing_manifest |" in section
+    assert "orders_rollup" not in section
+    for kind, where, why in PYTHON_OUTSIDE_AUDIT:
+        assert f"| {kind} | {where} | {why} |" in section

@@ -46,14 +46,14 @@ def test_partial_aggregation_before_shuffle(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_no_python_udfs_in_jvm_pipelines(spark, sf_dir):
+def test_no_python_udfs_in_jvm_pipelines(registry_explains):
     # every query except the explicitly-Python multimodal decode must
     # stay JVM-side (no BatchEvalPython / ArrowEvalPython nodes)
     python_ok = {"multimodal_decode_features"}
     for q in REGISTRY:
         if q.name in python_ok:
             continue
-        plan = _plan(spark, sf_dir, q.name)
+        plan = registry_explains[q.name].simple
         assert "EvalPython" not in plan, f"{q.name} fell off the JVM path"
 
 

@@ -135,6 +135,7 @@ def test_read_parquet_cached_schema_identity_and_invalidation(
 
     from github_data_pipeline_spark.sources.tables import (
         _SCHEMA_CACHE,
+        _tree_mtime_ns,
         read_parquet_cached_schema,
     )
 
@@ -145,7 +146,7 @@ def test_read_parquet_cached_schema_identity_and_invalidation(
     second = read_parquet_cached_schema(spark, p)  # served from it
     assert first.schema == fresh.schema == second.schema
     assert sorted(r["v"] for r in second.collect()) == [0, 2, 4, 6, 8]
-    key = (os.path.abspath(p), os.stat(p).st_mtime_ns)
+    key = (os.path.abspath(p), _tree_mtime_ns(os.path.abspath(p)))
     assert key in _SCHEMA_CACHE
 
     # rewrite with a different schema AND a bumped mtime: the stale

@@ -49,6 +49,28 @@ PYTHON_BY_DESIGN = {
     "seq_packing_manifest": {"FlatMapGroupsInPandas"},
 }
 
+# Executor-side Python stages the audited plans cannot show: the
+# streaming drains are skipped (SKIP_TAGS below) and two operators sit
+# in no registry plan. With the audited Python stages they make up the
+# list in README's "Architecture" paragraph.
+PYTHON_OUTSIDE_AUDIT = (
+    (
+        "FlatMapGroupsInPandasWithState",
+        "stateful streaming funnel (`streaming/stateful.py`)",
+        "streaming drain, skipped by the audit",
+    ),
+    (
+        "MapInPandas",
+        "BPE encoder (`operators/bpe.encode_words`)",
+        "no registry plan; `bpe_encoded_profile` encodes in Catalyst",
+    ),
+    (
+        "MapInPandas",
+        "bulk-index transport (`sources/sinks.py`)",
+        "no registry plan",
+    ),
+)
+
 # BroadcastNestedLoopJoin is a hazard by default (a big-big non-equi
 # join is a cluster-killer), but two shapes are the *intended* plan:
 BNLJ_BY_DESIGN = {
@@ -285,6 +307,7 @@ def _render_markdown(
         f"**{len(audits)} plans audited, {total_hazards} hazards.**",
         "",
     ]
+    lines += _render_python_stages(audits)
     if skipped:
         lines += [
             f"Registry reconciliation: {len(audits)} of "
@@ -300,6 +323,46 @@ def _render_markdown(
     return "\n".join(lines)
 
 
+def _render_python_stages(audits: list[PlanAudit]) -> list[str]:
+    by_kind: dict[str, list[str]] = {}
+    for a in audits:
+        for kind in a.python_stages:
+            by_kind.setdefault(kind, []).append(a.name)
+    lines = [
+        "## Executor-side Python stages",
+        "",
+        "Every stage where Python runs on the executors. In the audited",
+        "plans (each is on the `PYTHON_BY_DESIGN` allowlist, or it would",
+        "be a hazard):",
+        "",
+        "| stage | queries |",
+        "|---|---|",
+    ]
+    for kind in sorted(by_kind):
+        lines.append(f"| {kind} | {', '.join(sorted(by_kind[kind]))} |")
+    lines += [
+        "",
+        "Outside the audited plans (`PYTHON_OUTSIDE_AUDIT`):",
+        "",
+        "| stage | operator | why the audit cannot see it |",
+        "|---|---|---|",
+    ]
+    for kind, where, why in PYTHON_OUTSIDE_AUDIT:
+        lines.append(f"| {kind} | {where} | {why} |")
+    lines.append("")
+    return lines
+
+
+@dataclass
+class ExplainedPlan:
+    """A builder's final plan plus every plan it checkpointed, as
+    ``(simple, formatted)`` explain strings."""
+
+    simple: str
+    formatted: str
+    pre_checkpoint: list[tuple[str, str]]
+
+
 def _explain_pair(spark, df) -> tuple[str, str]:
     modes = spark._jvm.org.apache.spark.sql.execution.ExplainMode
     qe = df._jdf.queryExecution()
@@ -309,9 +372,9 @@ def _explain_pair(spark, df) -> tuple[str, str]:
     )
 
 
-def audit_query(spark, name: str, builder, sf_dir: str) -> PlanAudit:
-    """Audit one builder INCLUDING the DAGs upstream of every
-    ``localCheckpoint`` boundary.
+def explain_builder(spark, builder, sf_dir: str) -> ExplainedPlan:
+    """Run one builder and explain its plan INCLUDING the DAGs upstream
+    of every ``localCheckpoint`` boundary.
 
     A checkpoint truncates lineage, so the final plan starts at a
     checkpoint-RDD scan and everything upstream — where an allowlisted
@@ -319,12 +382,7 @@ def audit_query(spark, name: str, builder, sf_dir: str) -> PlanAudit:
     a plain explain (the r10 blind spot: token_heavy_hitters' audited
     row showed no Python stage because its MapInPandas pass sits
     before the checkpoint). While the builder runs, every
-    ``localCheckpoint`` call first records its pre-checkpoint plan;
-    each recorded subplan is audited under the SAME name (so the
-    by-design allowlists apply) and its hazards, Python stages, and
-    shape metrics fold into the row — a BatchEvalPython hidden behind
-    a checkpoint now fails the audit
-    (tests/test_plan_audit_checkpoint.py pins this).
+    ``localCheckpoint`` call first records its pre-checkpoint plan.
     """
     # patch the CONCRETE class: in Spark 4 pyspark.sql.DataFrame is the
     # abstract base and classic.DataFrame overrides localCheckpoint, so
@@ -349,9 +407,17 @@ def audit_query(spark, name: str, builder, sf_dir: str) -> PlanAudit:
         df = builder(spark, sf_dir)
     finally:
         DataFrame.localCheckpoint = real
-    simple, formatted = _explain_pair(spark, df)
-    a = audit_plan(name, simple, formatted)
-    for sub_simple, sub_formatted in captured:
+    return ExplainedPlan(*_explain_pair(spark, df), pre_checkpoint=captured)
+
+
+def audit_explained(name: str, plan: ExplainedPlan) -> PlanAudit:
+    """Audit a final plan with each pre-checkpoint subplan audited under
+    the SAME name (so the by-design allowlists apply) and its hazards,
+    Python stages and shape metrics folded into the row — a
+    BatchEvalPython hidden behind a checkpoint fails the audit
+    (tests/test_plan_audit_checkpoint.py pins this)."""
+    a = audit_plan(name, plan.simple, plan.formatted)
+    for sub_simple, sub_formatted in plan.pre_checkpoint:
         sub = audit_plan(name, sub_simple, sub_formatted)
         a.exchanges += sub.exchanges
         a.reused_exchanges += sub.reused_exchanges
@@ -364,11 +430,15 @@ def audit_query(spark, name: str, builder, sf_dir: str) -> PlanAudit:
         )
         a.hazards += [h for h in sub.hazards if h not in a.hazards]
         a.notes += [n for n in sub.notes if n not in a.notes]
-    if captured:
+    if plan.pre_checkpoint:
         a.notes.append(
-            f"{len(captured)} pre-checkpoint subplan(s) folded in"
+            f"{len(plan.pre_checkpoint)} pre-checkpoint subplan(s) folded in"
         )
     return a
+
+
+def audit_query(spark, name: str, builder, sf_dir: str) -> PlanAudit:
+    return audit_explained(name, explain_builder(spark, builder, sf_dir))
 
 
 def run_audit(
@@ -376,7 +446,11 @@ def run_audit(
     sf_dir: str,
     only: set[str] | None = None,
     skipped: list[str] | None = None,
+    explained: dict[str, ExplainedPlan] | None = None,
 ) -> list[PlanAudit]:
+    """Audit the registry in order. ``explained`` supplies plans already
+    built by ``explain_builder`` (by name) so a caller that needs them
+    for other checks builds each entry once."""
     from github_data_pipeline_spark.plans import all_plans
 
     registry = all_plans()
@@ -388,7 +462,12 @@ def run_audit(
             if skipped is not None:
                 skipped.append(q.name)
             continue
-        audits.append(audit_query(spark, q.name, q.builder, sf_dir))
+        plan = (
+            explained[q.name]
+            if explained is not None
+            else explain_builder(spark, q.builder, sf_dir)
+        )
+        audits.append(audit_explained(q.name, plan))
     return audits
 
 
