@@ -9,7 +9,7 @@ counts and single final divisions only (see functions/money.py for why).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_PATTERN = r"\s+"
@@ -39,6 +39,17 @@ def tokens(c: Column | str) -> Column:
     """Whitespace tokenization with empty tokens dropped."""
     return F.filter(
         F.split(F.trim(_col(c)), TOKEN_SPLIT_PATTERN), lambda t: t != F.lit("")
+    )
+
+
+def tokens_sql(expr: str = "text") -> str:
+    """DuckDB twin of :func:`tokens` for a VARCHAR expression ``expr``
+    (pass ``lower(text)`` for the case-folded LM vocabulary). The
+    ``''`` filter matters: DuckDB's split keeps a phantom empty token
+    for leading/trailing non-space whitespace and for empty text."""
+    return (
+        f"list_filter(string_split_regex(trim({expr}), "
+        f"'{TOKEN_SPLIT_PATTERN}'), t -> t <> '')"
     )
 
 
@@ -80,12 +91,71 @@ def lang_id(tok: Column) -> Column:
 
 
 def word_ngrams(tok: Column, n: int) -> Column:
-    """Word n-gram shingles: ARRAY<STRING> of space-joined n-token windows."""
+    """Word n-gram shingles: ARRAY<STRING> of space-joined n-token
+    windows, one array per row. For a row-per-gram stream use
+    :func:`token_windows` instead."""
     idx = F.sequence(F.lit(1), F.size(tok) - (n - 1))
     grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tok, i, n)))
     return F.when(F.size(tok) >= n, grams).otherwise(
         F.array().cast("array<string>")
     )
+
+
+def word_ngrams_sql(toks: str, n: int) -> str:
+    """DuckDB twin of :func:`word_ngrams` over a list column ``toks``."""
+    gram = " || ' ' || ".join(
+        f"{toks}[i + {k}]" if k else f"{toks}[i]" for k in range(n)
+    )
+    return (
+        f"list_transform(generate_series(1, greatest(len({toks}) - {n - 1}, 0)),"
+        f" i -> {gram})"
+    )
+
+
+def token_windows(
+    df: DataFrame,
+    toks: Column | str,
+    n: int,
+    *keep: str,
+    pad: tuple[int, int] = (0, 0),
+) -> DataFrame:
+    """(*keep, start, w0..w{n-1}): one row per n-token window of ``toks``.
+
+    ``start`` is the 0-based index of the window's first token and runs
+    from ``-pad[0]`` to ``size - n + pad[1]``; ``wk`` is token
+    ``start + k``, NULL past either end. ``pad=(0, 0)`` gives exactly
+    the windows of :func:`word_ngrams`; a pad adds edge windows hanging
+    off the front or the back. Rows too short for one window emit
+    nothing.
+
+    A generator, not ``word_ngrams``' transform: higher-order functions
+    evaluate outside whole-stage codegen, while the Generate over the
+    start sequence and the ``get`` projection above it compile."""
+    before, after = pad
+    t = df.select(*keep, _col(toks).alias("_toks")).where(
+        F.size("_toks") >= n - before - after
+    )
+    starts = F.sequence(F.lit(-before), F.size("_toks") - (n - after))
+    gen = t.select(*keep, "_toks", F.explode(starts).alias("start"))
+    start = F.col("start")
+    return gen.select(
+        *keep,
+        "start",
+        *[
+            F.get("_toks", start + k if k else start).alias(f"w{k}")
+            for k in range(n)
+        ],
+    )
+
+
+def window_gram(k: int) -> Column:
+    """The first ``k`` tokens of a :func:`token_windows` row joined by
+    spaces — the string :func:`word_ngrams` emits; NULL when any of
+    them is past the end."""
+    parts = [F.col("w0")]
+    for i in range(1, k):
+        parts += [F.lit(" "), F.col(f"w{i}")]
+    return F.concat(*parts) if k > 1 else parts[0]
 
 
 def token_poly_hash(t: Column) -> Column:

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import text as T
 from ..functions.fulltext import DEFAULT_MODE, analyze, analyze_py
 
 K1 = 1.2
@@ -196,13 +197,7 @@ def phrase_hit(toks: Column, phrase_terms: list[str]) -> Column:
         return F.lit(False)
     if n == 1:
         return F.array_contains(toks, phrase)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.when(
-        F.size(toks) >= F.lit(n), F.array_contains(grams, F.lit(phrase))
-    ).otherwise(F.lit(False))
+    return F.array_contains(T.word_ngrams(toks, n), F.lit(phrase))
 
 
 # -- Persisted inverted index ----------------------------------------------

@@ -1,6 +1,7 @@
 """Near-duplicate building blocks: shingling, MinHash signatures, LSH
 banding — shared by the oracle-checked plans (plans/dedup_plans.py) and
-the incremental maintenance path below.
+the incremental maintenance path below. Each builder the oracles
+replay has its DuckDB twin (``*_sql``) beside it.
 
 Incremental maintenance is the piece that makes near-dup viable on a
 *daily* 100 TB pipeline: when a new batch of documents lands, only the
@@ -18,8 +19,8 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 
-# shared literals (the SQL oracles in plans/dedup_plans.py embed the
-# same constants; keep in sync there)
+# p keeps the permutation products in int64 on both engines: a < p and
+# the shingle hash (mod p) < 2^30
 MINHASH_P = 1_000_000_007
 MINHASH_K = 16
 MINHASH_BAND_ROWS = 4
@@ -33,53 +34,29 @@ SIG_COLS = [f"sig{i}" for i in range(MINHASH_K)]
 
 def shingle_hash(s: F.Column) -> F.Column:
     """60-bit md5 prefix -> integer mod p (engine-neutral; identical in
-    DuckDB via the hex-parse twin)."""
+    DuckDB via :func:`shingle_hash_sql`)."""
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % MINHASH_P
+
+
+def shingle_hash_sql(s: str) -> str:
+    """DuckDB twin of :func:`shingle_hash`."""
+    return f"(CAST(('0x' || substr(md5({s}), 1, 15)) AS BIGINT) % {MINHASH_P})"
 
 
 def doc_shingle_stream(
     docs: DataFrame, n: int = 3, distinct: bool = True
 ) -> DataFrame:
-    """(doc_id, s) word n-gram shingle stream via codegen generators.
+    """(doc_id, s) word n-gram shingle stream of ``docs.text``.
 
-    The r12 form exploded ``array_distinct(transform(sequence(...),
-    i -> concat_ws(slice(toks, i, n))))`` — higher-order functions
-    evaluate INTERPRETED (outside whole-stage codegen) and the gram
-    array materializes per document before the explode. This form
-    explodes the position sequence (Generate, codegen) and builds each
-    shingle with element_at + concat in the codegen'd projection:
-    measured 5.7 -> 1.3 s for the corpus-wide stream at 30x the bench
-    SF, dedup included (guide §4.4/§1.2; the same rework shape as the
-    LM family's _bigram_stream and r12's tagged_gram_stream).
-
-    ``distinct=True`` reproduces doc_shingles' per-document set
-    exactly (one hash-aggregate whose map-side partial collapses the
-    within-task duplicates the array_distinct used to drop).
-    ``distinct=False`` skips that exchange for consumers that are
-    duplicate-insensitive — the MinHash signature path, whose per-doc
-    MIN is identical over multiset and set.
-
-    Docs with fewer than n tokens emit no rows, exactly as the empty
-    gram array did."""
-    t = docs.select("doc_id", T.tokens("text").alias("toks")).where(
-        F.size("toks") >= n
+    ``distinct=True`` keeps each document's shingle set (one
+    hash-aggregate whose map-side partial drops within-task
+    duplicates). ``distinct=False`` skips that exchange for consumers
+    that are duplicate-insensitive — the MinHash signature path, whose
+    per-doc MIN is identical over multiset and set. Docs with fewer
+    than n tokens emit no rows."""
+    out = T.token_windows(docs, T.tokens("text"), n, "doc_id").select(
+        "doc_id", T.window_gram(n).alias("s")
     )
-    gen = t.select(
-        "doc_id",
-        "toks",
-        F.explode(
-            F.sequence(F.lit(1), F.size("toks") - (n - 1))
-        ).alias("i"),
-    )
-    parts: list[F.Column] = []
-    for k in range(n):
-        if k:
-            parts.append(F.lit(" "))
-        idx = F.col("i") + F.lit(k) if k else F.col("i")
-        parts.append(F.element_at("toks", idx))
-    # concat of in-range element_at over non-null tokens == the old
-    # concat_ws(" ", slice(toks, i, n)) byte for byte
-    out = gen.select("doc_id", F.concat(*parts).alias("s"))
     return out.distinct() if distinct else out
 
 
@@ -88,21 +65,19 @@ def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return doc_shingle_stream(docs, n, distinct=True)
 
 
-def doc_shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, g): distinct word n-gram shingles, kept as one array per
-    document — the input shape for the shuffle-free signature path."""
-    grams = F.array_distinct(T.word_ngrams(T.tokens("text"), n))
-    return docs.select("doc_id", grams.alias("g"))
+def shingle_sets_sql(keep: str = "doc_id") -> str:
+    """DuckDB twin of the per-document shingle set: a SELECT over
+    ``documents`` yielding (keep, g), g the distinct word 3-gram list
+    (the rows :func:`doc_shingles` emits, one list per document)."""
+    return (
+        f"SELECT {keep}, list_distinct({T.word_ngrams_sql('t', 3)}) AS g"
+        f" FROM (SELECT {keep}, {T.tokens_sql()} AS t FROM documents)"
+    )
 
 
 def minhash_signatures(shingles: DataFrame) -> DataFrame:
-    """(doc_id, sig0..sigK-1): K map-side MINs over one shuffle.
-
-    Row-shaped input (one row per shingle). Prefer
-    ``minhash_signatures_from_arrays`` when the per-doc shingle array
-    is already at hand — it computes the same signatures with zero
-    shuffles.
-    """
+    """(doc_id, sig0..sigK-1): K map-side MINs over one shuffle of the
+    row-shaped (doc_id, s) shingle stream."""
     hashed = shingles.select(
         "doc_id", shingle_hash(F.col("s")).alias("h")
     )
@@ -113,26 +88,25 @@ def minhash_signatures(shingles: DataFrame) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*sig_cols)
 
 
+def minhash_signatures_sql(shingles: str) -> str:
+    """DuckDB twin of :func:`minhash_signatures`: a SELECT over the
+    relation ``shingles`` of (doc_id, s) rows."""
+    sigs = ",\n  ".join(
+        f"MIN(({a} * h + {b}) % {MINHASH_P}) AS sig{i}"
+        for i, (a, b) in enumerate(MINHASH_PERMS)
+    )
+    return (
+        f"SELECT doc_id,\n  {sigs}\n"
+        f"FROM (SELECT doc_id, {shingle_hash_sql('s')} AS h FROM {shingles})\n"
+        "GROUP BY doc_id"
+    )
+
+
 def minhash_signatures_from_arrays(grams: DataFrame) -> DataFrame:
-    """(doc_id, sig0..sigK-1) from (doc_id, g ARRAY<STRING>) — explodes
-    the array and reuses the row-shaped aggregation. Identical values
-    to ``minhash_signatures(doc_shingles(...))``: min over the same
-    distinct-shingle set under the same permutations.
-
-    The original form computed each signature as an ``array_min`` over
-    its own ``transform`` of the hash array — zero shuffles, but
-    higher-order functions run INTERPRETED (no whole-stage codegen, no
-    subexpression elimination), so the K=16 passes cost 5.3 s at sf0.1
-    where the exploded hash-aggregate path costs 1.4 s (measured r12,
-    local[32]): the groupBy's partial aggregation is map-side, its
-    shuffle carries only |docs| x K long columns, and the md5 + all 16
-    permutation minima evaluate in one codegen'd operator. At 100 TB
-    the shuffle stays |docs|-bounded (pre-aggregated), so the codegen
-    win dominates at every scale.
-
-    Docs with no shingles (fewer than n tokens) explode to no rows and
-    are filtered exactly as before.
-    """
+    """(doc_id, sig0..sigK-1) from (doc_id, g ARRAY<STRING>): explodes
+    the array and reuses the row-shaped aggregation, so the values
+    equal ``minhash_signatures(doc_shingles(...))``. Docs with no
+    shingles explode to no rows."""
     return minhash_signatures(
         grams.select("doc_id", F.explode("g").alias("s"))
     )
@@ -162,6 +136,25 @@ def band_index(sigs: DataFrame) -> DataFrame:
     )
     return sigs.select("doc_id", F.explode(band_structs).alias("b")).select(
         "doc_id", F.col("b.band").alias("band"), F.col("b.key").alias("key")
+    )
+
+
+def band_index_sql(sigs: str) -> str:
+    """DuckDB twin of :func:`band_index` over the relation ``sigs``."""
+    structs = ", ".join(
+        "{'band': %d, 'key': md5(%s)}"
+        % (
+            band,
+            " || '-' || ".join(
+                f"sig{band * MINHASH_BAND_ROWS + r}"
+                for r in range(MINHASH_BAND_ROWS)
+            ),
+        )
+        for band in range(MINHASH_K // MINHASH_BAND_ROWS)
+    )
+    return (
+        "SELECT doc_id, u.b.band AS band, u.b.key AS key"
+        f" FROM {sigs}, UNNEST([{structs}]) AS u(b)"
     )
 
 

@@ -11,8 +11,8 @@ The suffix-array construction does not map onto a shuffle-based engine,
 but its *fixed-window* approximation does, in three Catalyst-only
 stages (no Python row path):
 
-1. positional token n-grams: ``(doc_id, start, gram_hash)`` via a
-   higher-order ``transform`` over the token array — one narrow explode;
+1. positional token n-grams: ``(doc_id, start, gram_hash)`` from the
+   ``functions/text.token_windows`` generator — one narrow explode;
 2. ownership: per gram, the canonical owner is the smallest ``doc_id``
    containing it; every *other* occurrence is a flagged window. One
    shuffle on ``gram_hash`` (a min-aggregate, map-side combinable);
@@ -43,27 +43,13 @@ DEFAULT_WINDOW = 8
 def positional_ngrams(docs: DataFrame, n: int = DEFAULT_WINDOW) -> DataFrame:
     """(doc_id, start, gram_hash) for every token window of length n.
 
-    ``start`` is the 0-based token index. Docs shorter than n produce
-    no rows (nothing to deduplicate at this granularity).
+    ``start`` is the 0-based token index; ``gram_hash`` is xxhash64 of
+    the space-joined window (the string ``functions/text.word_ngrams``
+    emits). Docs shorter than n produce no rows (nothing to
+    deduplicate at this granularity).
     """
-    tok = T.tokens("text")
-    # sequence(0, neg) DESCENDS — short docs must yield no starts, not
-    # negative ones
-    starts = F.when(
-        F.size(tok) >= F.lit(n), F.sequence(F.lit(0), F.size(tok) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    wins = F.transform(
-        starts,
-        lambda i: F.struct(
-            i.alias("start"),
-            F.xxhash64(F.concat_ws("", F.slice(tok, i + 1, n))).alias(
-                "gram_hash"
-            ),
-        ),
-    )
-    return (
-        docs.select("doc_id", F.explode(wins).alias("w"))
-        .select("doc_id", F.col("w.start").alias("start"), "w.gram_hash")
+    return T.token_windows(docs, T.tokens("text"), n, "doc_id").select(
+        "doc_id", "start", F.xxhash64(T.window_gram(n)).alias("gram_hash")
     )
 
 

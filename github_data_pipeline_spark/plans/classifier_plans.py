@@ -44,8 +44,6 @@ from .core import REGISTRY
 
 _add = REGISTRY.add
 
-# filtered tokens — the phantom-''-token guard (see repetition_plans)
-_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '')"
 
 FP_SCALE = 10_000  # ratio fixed point: 1.0 -> 10000
 LEN_SCALE = 100  # mean-token-length fixed point: 1 char -> 100
@@ -71,7 +69,7 @@ _STOPS = ", ".join(f"'{w}'" for w in T.EN_STOPWORDS)
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c
-      FROM (SELECT source, {_TOKS} AS toks FROM documents)
+      FROM (SELECT source, {T.tokens_sql()} AS toks FROM documents)
     ), scored AS (
       SELECT source,
         CASE WHEN t = 0 THEN 0 ELSE
@@ -259,7 +257,7 @@ PR_THRESHOLDS = (11_000, 12_500, 13_700, 15_000, 17_000)
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c
-      FROM (SELECT {_TOKS} AS toks FROM documents)
+      FROM (SELECT {T.tokens_sql()} AS toks FROM documents)
     ), scored AS (
       SELECT
         CASE WHEN t = 0 THEN 0 ELSE
@@ -385,7 +383,7 @@ AUC_SCALE = 1_000_000
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c
-      FROM (SELECT {_TOKS} AS toks FROM documents)
+      FROM (SELECT {T.tokens_sql()} AS toks FROM documents)
     ), scored AS (
       SELECT
         CASE WHEN t = 0 THEN 0 ELSE
@@ -519,7 +517,7 @@ _CAL_SCORED_SQL = f"""f AS (
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c
-      FROM (SELECT {_TOKS} AS toks FROM documents)
+      FROM (SELECT {T.tokens_sql()} AS toks FROM documents)
     ), scored AS (
       SELECT
         CASE WHEN t = 0 THEN 0 ELSE

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import text as T
 from ..sources.tables import load_table, rows_to_dataframe, spread
 from .core import REGISTRY
 
@@ -50,12 +51,6 @@ CMS_D = 3
 CMS_W = 32
 #: probe set: the exact top-K tokens (count desc, token asc)
 CMS_PROBE_K = 20
-
-# filtered form (the repo-wide standard, e.g. classifier_plans /
-# curation_plans): the unfiltered split would emit a phantom '' token
-# for an empty/whitespace-only document, silently diverging from the
-# Spark side (functions/text.tokens drops empties)
-_TOKS_SQL = "list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '')"
 
 
 def _h_sql(row: int, col: str = "tok") -> str:
@@ -83,7 +78,6 @@ def _h_col(row: int):
     )
 
 
-
 def _cell_gen():
     """Memoized (r, bucket)-cell generator over column ``tok`` — the
     same deterministic fragment feeds the sketch build and the probe
@@ -107,7 +101,7 @@ def _cell_gen():
     "cms_token_frequency",
     f"""
     WITH toks AS (
-      SELECT unnest({_TOKS_SQL}) AS tok FROM documents
+      SELECT unnest({T.tokens_sql()}) AS tok FROM documents
     ), exact AS (
       SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY tok
     ), probes AS (
@@ -264,7 +258,7 @@ def _batch_cells(df: DataFrame) -> DataFrame:
     "stream_cms_equality",
     f"""
     WITH toks AS (
-      SELECT unnest({_TOKS_SQL}) AS tok FROM documents
+      SELECT unnest({T.tokens_sql()}) AS tok FROM documents
     ), cells AS (
       {" UNION ALL ".join(
           f"SELECT {r} AS r, {_h_sql(r)} AS b, COUNT(*) AS c"

@@ -16,16 +16,15 @@ from ..functions import text as T
 from ..functions.hashing import md5_h32_sql
 from ..operators.budget import HASH_BUCKETS, allocation_rates, budget_sample
 from ..operators.decontam import contamination_report
+from ..operators.neardup import (
+    band_index_sql,
+    minhash_signatures_sql,
+    shingle_sets_sql,
+)
 from ..sources.tables import load_table, spread
 from .core import REGISTRY
 
 _add = REGISTRY.add
-
-_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '')"
-_GRAMS = (
-    "list_distinct(list_transform(generate_series(1, greatest(len(t)-2, 0)),"
-    " i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))"
-)
 
 DECONTAM_MIN_HITS = 2
 
@@ -34,8 +33,7 @@ DECONTAM_MIN_HITS = 2
     "decontam_overlap",
     f"""
     WITH allsh AS (
-      SELECT doc_id, unnest({_GRAMS}) AS s
-      FROM (SELECT doc_id, {_TOKS} AS t FROM documents)
+      SELECT doc_id, unnest(g) AS s FROM ({shingle_sets_sql()})
     ), bench AS (
       SELECT doc_id AS bench_id, s FROM allsh WHERE doc_id % 97 = 0
     ), corp AS (
@@ -80,7 +78,7 @@ _WEIGHTS_VALUES = ", ".join(
     "budget_sample_counts",
     f"""
     WITH tok AS (
-      SELECT doc_id, source, len({_TOKS}) AS n FROM documents
+      SELECT doc_id, source, len({T.tokens_sql()}) AS n FROM documents
     ), per_src AS (
       SELECT source, CAST(SUM(n) AS BIGINT) AS tokens FROM tok GROUP BY source
     ), budget AS (
@@ -255,11 +253,8 @@ def _funnel_oracle() -> str:
         _IPV4_RE,
         _LONG_ID_RE,
     )
-    from ..operators.neardup import MINHASH_P
-    from .dedup_plans import _BAND_STRUCTS_SQL, _SIG_COLS_SQL
 
     # functions/text.py twins over the funnel's evolving text column
-    h60 = f"(CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) % {MINHASH_P})"
     lang_scores = {
         lang: f"len(list_filter(toks, t -> list_contains("
         f"[{', '.join(repr(w) for w in markers)}], lower(t))))"
@@ -317,7 +312,7 @@ WITH RECURSIVE lines AS (
 ), cleaned_nonempty AS (
   SELECT doc_id, text FROM cleaned WHERE length(text) > 0
 ), toked AS (
-  SELECT doc_id, text, string_split_regex(text, '\\s+') AS toks
+  SELECT doc_id, text, {T.tokens_sql()} AS toks
   FROM cleaned_nonempty
 ), lang_scored AS (
   SELECT doc_id, text, toks,
@@ -334,9 +329,7 @@ WITH RECURSIVE lines AS (
 ), bigram_stats AS (
   SELECT doc_id, MAX(c) AS mx, SUM(c) AS n FROM (
     SELECT doc_id, g, COUNT(*) AS c FROM (
-      SELECT doc_id, unnest(list_transform(
-        generate_series(1, greatest(len(toks) - 1, 0)),
-        i -> toks[i] || ' ' || toks[i+1])) AS g
+      SELECT doc_id, unnest({T.word_ngrams_sql("toks", 2)}) AS g
       FROM quality)
     GROUP BY 1, 2)
   GROUP BY doc_id
@@ -345,20 +338,14 @@ WITH RECURSIVE lines AS (
   LEFT JOIN bigram_stats b ON b.doc_id = q.doc_id
   WHERE b.doc_id IS NULL OR (CAST(b.mx AS DOUBLE) / b.n) <= 0.2
 ), grams AS (
-  SELECT doc_id, list_distinct(list_transform(
-    generate_series(1, greatest(len(toks) - 2, 0)),
-    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
+  SELECT doc_id, list_distinct({T.word_ngrams_sql("toks", 3)}) AS g
   FROM repetition
-), hashed AS (
-  SELECT doc_id, {h60} AS h
-  FROM (SELECT doc_id, unnest(g) AS s FROM grams WHERE len(g) > 0)
+), shingles AS (
+  SELECT doc_id, unnest(g) AS s FROM grams
 ), sigs AS (
-  SELECT doc_id,
-  {_SIG_COLS_SQL}
-  FROM hashed GROUP BY doc_id
+  {minhash_signatures_sql("shingles")}
 ), bands AS (
-  SELECT doc_id, u.b.band AS band, u.b.key AS key
-  FROM sigs, UNNEST([{_BAND_STRUCTS_SQL}]) AS u(b)
+  {band_index_sql("sigs")}
 ), cands AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b

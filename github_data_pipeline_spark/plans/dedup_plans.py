@@ -46,34 +46,24 @@ from ..operators.hints import (
     broadcast_if_bounded,
     parquet_num_rows,
 )
-from ..sources.tables import load_table, spread
-from .core import REGISTRY
-
-_add = REGISTRY.add
-
-_TOKS = "string_split_regex(trim(text), '\\s+')"
-_GRAMS = (
-    "list_distinct(list_transform(generate_series(1, greatest(len(t)-2, 0)),"
-    " i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))"
-)
-
-# MinHash parameters live in operators/neardup.py (shared with the
-# incremental maintenance path); the SQL oracles embed the same
-# literals. p fits products in int64: a < 2^31, (h % p) < 2^30.
-from ..operators.neardup import (  # noqa: E402
+from ..operators.neardup import (
     LSH_BUCKET_CAP,
-    MINHASH_BAND_ROWS,
     MINHASH_K,
-    MINHASH_P,
-    MINHASH_PERMS,
     SIMHASH_BUCKET_CAP,
     band_index,
+    band_index_sql,
     capped_bucket_pairs,
     doc_shingle_stream,
     doc_shingles,
     lsh_candidates_capped,
     minhash_signatures,
+    minhash_signatures_sql,
+    shingle_sets_sql,
 )
+from ..sources.tables import load_table, spread
+from .core import REGISTRY
+
+_add = REGISTRY.add
 
 
 def _duck_capped_pairs(cap: int, fallback: str = "star") -> str:
@@ -96,11 +86,6 @@ def _duck_capped_pairs(cap: int, fallback: str = "star") -> str:
         END) AS p
       FROM buckets
     """
-
-# 60-bit md5 prefix -> integer, then reduced mod p. Identical on both
-# engines because md5 hex is identical (operators/neardup.shingle_hash
-# is the Spark twin).
-_DUCK_H = f"(CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) % {MINHASH_P})"
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -170,8 +155,7 @@ NEARDUP_DF_CAP = 10  # shingles seen in more docs than this are boilerplate
 # candidates (neardup_jaccard_pairs emits them scored; the cluster
 # query below closes them transitively)
 _JACCARD_CTES = f"""ex0 AS (
-      SELECT doc_id, unnest({_GRAMS}) AS s
-      FROM (SELECT doc_id, {_TOKS} AS t FROM documents)
+      SELECT doc_id, unnest(g) AS s FROM ({shingle_sets_sql()})
     ), hot AS (
       SELECT s FROM ex0 GROUP BY s HAVING COUNT(*) > {NEARDUP_DF_CAP}
     ), ex AS (
@@ -279,22 +263,6 @@ def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH banding
 # --------------------------------------------------------------------------
 
-_SIG_COLS_SQL = ",\n      ".join(
-    f"MIN(({a} * h + {b}) % {MINHASH_P}) AS sig{i}"
-    for i, (a, b) in enumerate(MINHASH_PERMS)
-)
-_BAND_STRUCTS_SQL = ", ".join(
-    "{'band': %d, 'key': md5(%s)}"
-    % (
-        band,
-        " || '-' || ".join(
-            f"sig{band * MINHASH_BAND_ROWS + r}" for r in range(MINHASH_BAND_ROWS)
-        ),
-    )
-    for band in range(MINHASH_K // MINHASH_BAND_ROWS)
-)
-
-
 _SIG_MATCHES_SQL = " + ".join(
     f"(CASE WHEN sa.sig{i} = sb.sig{i} THEN 1 ELSE 0 END)"
     for i in range(MINHASH_K)
@@ -305,19 +273,13 @@ _SIG_MATCHES_SQL = " + ".join(
     "minhash_lsh_candidates",
     f"""
     WITH grams AS (
-      SELECT doc_id, {_GRAMS} AS g
-      FROM (SELECT doc_id, {_TOKS} AS t FROM documents)
+      {shingle_sets_sql()}
     ), ex AS (
       SELECT doc_id, unnest(g) AS s FROM grams
-    ), hashed AS (
-      SELECT doc_id, {_DUCK_H} AS h FROM ex
     ), sigs AS (
-      SELECT doc_id,
-      {_SIG_COLS_SQL}
-      FROM hashed GROUP BY doc_id
+      {minhash_signatures_sql("ex")}
     ), bands AS (
-      SELECT doc_id, u.b.band AS band, u.b.key AS key
-      FROM sigs, UNNEST([{_BAND_STRUCTS_SQL}]) AS u(b)
+      {band_index_sql("sigs")}
     ), buckets AS (
       SELECT band, key, list_sort(list(doc_id)) AS docs
       FROM bands GROUP BY band, key HAVING COUNT(*) >= 2
@@ -359,13 +321,10 @@ _SIG_MATCHES_SQL = " + ".join(
 )
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    # codegen shingle stream, duplicates kept: the signature MIN is
-    # identical over multiset and set, so the per-doc array_distinct
-    # the r12 form paid (inside an interpreted HOF array build) buys
-    # nothing here — the stream explodes token positions and builds
-    # each shingle inside whole-stage codegen (doc_shingle_stream;
-    # guide §4.4). The groupBy exchange still carries only
-    # (doc_id, 16 partial mins) per task after map-side aggregation.
+    # shingle stream with duplicates kept: the signature MIN is
+    # identical over multiset and set. The groupBy exchange carries
+    # only (doc_id, 16 partial mins) per task after map-side
+    # aggregation.
     sh = doc_shingle_stream(d, distinct=False)
     # materialize the signature table ONCE: every downstream consumer
     # (band index, both verify sides) reads the checkpointed 17-column
@@ -459,7 +418,7 @@ _ASSEMBLE_SQL = " + ".join(
     f"""
     WITH tokc AS (
       SELECT doc_id, tok, COUNT(*) AS w
-      FROM (SELECT doc_id, unnest(list_filter({_TOKS}, t -> t <> '')) AS tok
+      FROM (SELECT doc_id, unnest({T.tokens_sql()}) AS tok
             FROM documents)
       GROUP BY doc_id, tok
     ), hashed AS (
@@ -847,8 +806,7 @@ def shingle_h120(col: str = "s") -> F.Column:
     "jaccard_prefix_filter_pairs",
     f"""
     WITH ex AS (
-      SELECT doc_id, unnest({_GRAMS}) AS s
-      FROM (SELECT doc_id, {_TOKS} AS t FROM documents)
+      SELECT doc_id, unnest(g) AS s FROM ({shingle_sets_sql()})
     ), sizes AS (
       SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id
     ), pairs AS (

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.fulltext import DEFAULT_MODE, analyze_sql
+from ..functions.text import word_ngrams_sql
 from ..operators.fulltext import K1, B, bm25_scan_topk, query_terms
 from ..sources.tables import load_table, spread
 from .core import REGISTRY
@@ -98,10 +99,8 @@ def bm25_oracle(
         phrase_str = " ".join(pterms)
         pn = len(pterms)
         per_cols.append(
-            f"CASE WHEN len(toks) >= {pn} THEN list_contains("
-            f"list_transform(generate_series(1, len(toks) - {pn - 1}), "
-            f"i -> array_to_string(toks[i:i+{pn - 1}], ' ')), "
-            f"'{phrase_str}') ELSE FALSE END AS phrase_hit"
+            f"list_contains({word_ngrams_sql('toks', pn)}, '{phrase_str}')"
+            " AS phrase_hit"
         )
         out_cols += ", phrase_hit"
     return f"""

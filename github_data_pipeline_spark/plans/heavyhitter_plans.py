@@ -29,18 +29,12 @@ from .core import REGISTRY
 #: candidate pass and the threshold, so they share the constant.
 HH_K = 99
 
-# tokenizer twin of T.tokens(lower(text)) — the lm_plans parity pattern
-_TOKS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), "
-    "t -> t <> '')"
-)
-
 
 @REGISTRY.add(
     "token_heavy_hitters",
     f"""
     WITH tok AS (
-      SELECT UNNEST({_TOKS}) AS token FROM documents
+      SELECT UNNEST({T.tokens_sql("lower(text)")}) AS token FROM documents
     ), total AS (
       SELECT COUNT(*) AS n FROM tok
     )

@@ -26,47 +26,12 @@ from .core import REGISTRY
 
 TOP_N = 50
 
-# filtered tokens — phantom-''-token guard, as in repetition_plans
-_TOKS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), "
-    "t -> t <> '')"
-)
-
-
-def _bigram_stream(d: DataFrame, *extra: str) -> DataFrame:
-    """(*extra, left_tok, right_tok) bigram stream of ``d.text``.
-
-    Built as a codegen generator — explode the position sequence, then
-    project both tokens with element_at — instead of the interpreted
-    ``transform(sequence(...), i -> struct(...))`` array the r12 form
-    exploded (guide §4.4/§1.2: higher-order functions evaluate
-    interpreted, outside whole-stage codegen; the struct array also
-    materializes per document before the explode). Row-identical by
-    construction: the same positions 1..size-1 yield the same
-    (left, right) pairs, and docs with fewer than two tokens emit
-    nothing in both forms (the where() here, the empty array there).
-    Same rework shape as repetition_plans.tagged_gram_stream (r12,
-    measured 1.7x there)."""
-    t = d.select(
-        *extra, T.tokens(F.lower(F.col("text"))).alias("toks")
-    ).where(F.size("toks") >= 2)
-    gen = t.select(
-        *extra,
-        "toks",
-        F.explode(F.sequence(F.lit(1), F.size("toks") - 1)).alias("i"),
-    )
-    return gen.select(
-        *extra,
-        F.element_at("toks", F.col("i")).alias("left_tok"),
-        F.element_at("toks", F.col("i") + F.lit(1)).alias("right_tok"),
-    )
-
 
 @REGISTRY.add(
     "lm_bigram_counts",
     f"""
     WITH toks AS (
-      SELECT {_TOKS} AS w FROM documents
+      SELECT {T.tokens_sql("lower(text)")} AS w FROM documents
     ), bi AS (
       SELECT w[i] AS left_tok, w[i+1] AS right_tok
       FROM toks, UNNEST(generate_series(1, len(w) - 1)) AS u(i)
@@ -99,7 +64,8 @@ def _bigram_stream(d: DataFrame, *extra: str) -> DataFrame:
 def lm_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents").select("text"))
     counts = (
-        _bigram_stream(d)
+        T.token_windows(d, T.tokens(F.lower("text")), 2)
+        .select(F.col("w0").alias("left_tok"), F.col("w1").alias("right_tok"))
         .groupBy("left_tok", "right_tok")
         .agg(F.count(F.lit(1)).alias("bigram_count"))
     )
@@ -149,7 +115,7 @@ KN_D_NUM, KN_D_DEN = 3, 4  # discount D = 0.75
     "lm_kn_bigram_probs",
     f"""
     WITH toks AS (
-      SELECT {_TOKS} AS w FROM documents
+      SELECT {T.tokens_sql("lower(text)")} AS w FROM documents
     ), bi AS (
       SELECT w[i] AS left_tok, w[i+1] AS right_tok
       FROM toks, UNNEST(generate_series(1, len(w) - 1)) AS u(i)
@@ -207,7 +173,8 @@ def lm_kn_bigram_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tested SF); over it they degrade to vocab-keyed shuffle joins
     # that scale, and AQE re-broadcasts at runtime if actually small.
     counts = (
-        _bigram_stream(d)
+        T.token_windows(d, T.tokens(F.lower("text")), 2)
+        .select(F.col("w0").alias("left_tok"), F.col("w1").alias("right_tok"))
         .groupBy("left_tok", "right_tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .localCheckpoint()
@@ -280,7 +247,7 @@ LM_COUNTS_CKPT_MIN_DOCS = 50_000
     "lm_doc_typicality",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKS} AS w FROM documents
+      SELECT doc_id, {T.tokens_sql("lower(text)")} AS w FROM documents
     ), docbi AS (
       SELECT doc_id, w[i] AS left_tok, w[i+1] AS right_tok,
              COUNT(*) AS dc
@@ -349,7 +316,12 @@ def lm_doc_typicality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (swap localCheckpoint for a parquet intermediate); the scoring
     # join's model side is then size-gated on the EXACT vocab count.
     docbi = (
-        _bigram_stream(d, "doc_id")
+        T.token_windows(d, T.tokens(F.lower("text")), 2, "doc_id")
+        .select(
+            "doc_id",
+            F.col("w0").alias("left_tok"),
+            F.col("w1").alias("right_tok"),
+        )
         .groupBy("doc_id", "left_tok", "right_tok")
         .agg(F.count(F.lit(1)).cast("long").alias("dc"))
         .localCheckpoint()
@@ -451,7 +423,7 @@ def lm_doc_typicality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lm_kn_trigram_probs",
     f"""
     WITH toks AS (
-      SELECT {_TOKS} AS w FROM documents
+      SELECT {T.tokens_sql("lower(text)")} AS w FROM documents
     ), tri AS (
       SELECT w[i] AS u, w[i+1] AS v, w[i+2] AS t, COUNT(*) AS c3
       FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS x(i)
@@ -520,37 +492,20 @@ def lm_doc_typicality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lm_kn_trigram_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents").select("text"))
 
-    # ONE corpus scan (r7 verdict ask — was two, one per explode
-    # order): the bigram stream is recoverable from the trigram stream
-    # plus a per-doc edge term. A trigram at position i covers the
-    # bigram (v, t) at position i+1, i.e. positions 2..L-1; the one
-    # missing bigram per document is position 1, emitted as an edge
-    # struct with u = NULL (docs with exactly two tokens have no
-    # trigrams and contribute only their edge bigram). One combined
-    # explode then feeds a single (u, v, t) aggregation — NULL u is
-    # its own group — from which the trigram table (u IS NOT NULL) and
-    # the full bigram table (sum over u) both derive vocab-side, so
-    # the corpus is scanned and shuffled exactly once.
-    # Codegen generator form of the combined stream (same rework as
-    # _bigram_stream, guide §4.4): 0-based positions j = -1 .. L-3,
-    # where j = -1 is the edge row (get() returns NULL at -1, giving
-    # u = NULL with v = token 1, t = token 2) and j >= 0 is the
-    # trigram (token j+1, j+2, j+3) — row-identical to the old
-    # interpreted tri_structs + edge_struct concat (docs with two
-    # tokens emit only their edge row via sequence(-1, -1); docs with
-    # fewer emit nothing in both forms).
-    tks = d.select(
-        T.tokens(F.lower(F.col("text"))).alias("toks")
-    ).where(F.size("toks") >= 2)
-    gen = tks.select(
-        "toks",
-        F.explode(F.sequence(F.lit(-1), F.size("toks") - 3)).alias("j"),
-    )
+    # ONE corpus scan: the bigram stream is recoverable from the
+    # trigram stream plus a per-doc edge term. A trigram at position i
+    # covers the bigram (v, t) at position i+1, i.e. positions 2..L-1;
+    # the one missing bigram per document is position 1, the window
+    # padded one token off the front (u = NULL; docs with exactly two
+    # tokens have no trigrams and contribute only that edge row). One
+    # (u, v, t) aggregation — NULL u is its own group — then yields the
+    # trigram table (u IS NOT NULL) and the full bigram table (sum
+    # over u), both vocab-side, so the corpus is scanned and shuffled
+    # exactly once.
     combined = (
-        gen.select(
-            F.get("toks", F.col("j")).alias("u"),
-            F.get("toks", F.col("j") + 1).alias("v"),
-            F.get("toks", F.col("j") + 2).alias("t"),
+        T.token_windows(d, T.tokens(F.lower("text")), 3, pad=(1, 0))
+        .select(
+            F.col("w0").alias("u"), F.col("w1").alias("v"), F.col("w2").alias("t")
         )
         .groupBy("u", "v", "t")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))

@@ -46,33 +46,27 @@ from pyspark.sql import functions as F
 
 from ..operators.neardup import (
     band_index,
+    band_index_sql,
     doc_shingle_stream,
     incremental_lsh_candidates,
     lsh_candidates,
     minhash_signatures,
+    minhash_signatures_sql,
+    shingle_sets_sql,
 )
 from ..sources.tables import load_table, spread
 from .core import REGISTRY
-from .dedup_plans import _BAND_STRUCTS_SQL, _DUCK_H, _GRAMS, _SIG_COLS_SQL, _TOKS
 
 
 @REGISTRY.add(
     "lsh_incremental_index",
     f"""
-    WITH grams AS (
-      SELECT doc_id, {_GRAMS} AS g
-      FROM (SELECT doc_id, {_TOKS} AS t FROM documents)
-    ), ex AS (
-      SELECT doc_id, unnest(g) AS s FROM grams
-    ), hashed AS (
-      SELECT doc_id, {_DUCK_H} AS h FROM ex
+    WITH ex AS (
+      SELECT doc_id, unnest(g) AS s FROM ({shingle_sets_sql()})
     ), sigs AS (
-      SELECT doc_id,
-      {_SIG_COLS_SQL}
-      FROM hashed GROUP BY doc_id
+      {minhash_signatures_sql("ex")}
     ), bands AS (
-      SELECT doc_id, u.b.band AS band, u.b.key AS key
-      FROM sigs, UNNEST([{_BAND_STRUCTS_SQL}]) AS u(b)
+      {band_index_sql("sigs")}
     )
     SELECT DISTINCT
            CAST(a.doc_id AS BIGINT) AS doc_a,
@@ -166,20 +160,12 @@ STAR_CAP = 2
 @REGISTRY.add(
     "lsh_capped_star_components",
     f"""
-    WITH RECURSIVE grams AS (
-      SELECT doc_id, {_GRAMS} AS g
-      FROM (SELECT doc_id, {_TOKS} AS t FROM documents)
-    ), ex AS (
-      SELECT doc_id, unnest(g) AS s FROM grams
-    ), hashed AS (
-      SELECT doc_id, {_DUCK_H} AS h FROM ex
+    WITH RECURSIVE ex AS (
+      SELECT doc_id, unnest(g) AS s FROM ({shingle_sets_sql()})
     ), sigs AS (
-      SELECT doc_id,
-      {_SIG_COLS_SQL}
-      FROM hashed GROUP BY doc_id
+      {minhash_signatures_sql("ex")}
     ), bands AS (
-      SELECT doc_id, u.b.band AS band, u.b.key AS key
-      FROM sigs, UNNEST([{_BAND_STRUCTS_SQL}]) AS u(b)
+      {band_index_sql("sigs")}
     ), cand AS (
       SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
       FROM bands a

@@ -35,9 +35,9 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions import vectors as V
+from ..operators.neardup import shingle_sets_sql
 from ..sources.tables import load_table, spread
 from .core import REGISTRY
-from .lm_plans import _TOKS as _LM_TOKS
 from .similarity_plans import _duck_cos
 
 _add = REGISTRY.add
@@ -49,15 +49,6 @@ MIN_PAIR = 5  # lift stability floor: pairs seen fewer times are noise
 LIFT_SCALE = 1_000_000
 TOP_LIFT = 50
 TOP_DUP_DOCS = 200
-
-# word tokens / distinct 3-gram shingles — the dedup-family rendering
-# (plans/dedup_plans.py), so the dup-gram rate agrees with what the
-# pairwise dedup queries consider a shingle
-_W_TOKS = "string_split_regex(trim(text), '\\s+')"
-_W_GRAMS = (
-    "list_distinct(list_transform(generate_series(1, greatest(len(t)-2, 0)),"
-    " i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))"
-)
 
 
 @_add(
@@ -164,7 +155,7 @@ def stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lm_bigram_lift",
     f"""
     WITH toks AS (
-      SELECT {_LM_TOKS} AS w FROM documents
+      SELECT {T.tokens_sql("lower(text)")} AS w FROM documents
     ), uni AS (
       SELECT t, COUNT(*) AS cu FROM (
         SELECT w[i] AS t FROM toks, UNNEST(generate_series(1, len(w))) AS x(i)
@@ -205,26 +196,12 @@ def stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lm_bigram_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents").select("text"))
-    # Codegen generator form of the bigram+edge stream (the same
-    # rework as lm_plans._bigram_stream, guide §4.4 — the interpreted
-    # transform-struct arrays evaluated outside whole-stage codegen):
-    # positions i = 1 .. L over the 1-based token array; a is always
-    # in range, and the 0-based get(toks, i) is token i+1 — NULL at
-    # i = L, which IS the edge row (a = last token, b = NULL).
-    # Row-identical to the old bi_structs + edge_struct concat; docs
-    # with a single token emit exactly their edge row in both forms.
-    tks = d.select(
-        T.tokens(F.lower(F.col("text"))).alias("toks")
-    ).where(F.size("toks") >= 1)
-    gen = tks.select(
-        "toks",
-        F.explode(F.sequence(F.lit(1), F.size("toks"))).alias("i"),
-    )
+    # the bigram stream padded one token off the back: every token is
+    # exactly one window's a, and the last window of each document is
+    # the edge row (b = NULL) the unigram table needs
     combined = (
-        gen.select(
-            F.element_at("toks", F.col("i")).alias("a"),
-            F.get("toks", F.col("i")).alias("b"),
-        )
+        T.token_windows(d, T.tokens(F.lower("text")), 2, pad=(0, 1))
+        .select(F.col("w0").alias("a"), F.col("w1").alias("b"))
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("cab"))
         # vocab-sized; checkpoint pins the single corpus scan for the
@@ -277,12 +254,8 @@ def lm_bigram_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_add(
     "doc_dup_ngram_rate",
     f"""
-    WITH t AS (
-      SELECT doc_id, {_W_TOKS} AS t FROM documents
-    ), dg AS (
-      SELECT doc_id, g FROM (
-        SELECT doc_id, UNNEST({_W_GRAMS}) AS g FROM t
-      )
+    WITH dg AS (
+      SELECT doc_id, UNNEST(g) AS g FROM ({shingle_sets_sql()})
     ), df AS (
       SELECT g, COUNT(*) AS n_docs FROM dg GROUP BY 1
     ), per AS (

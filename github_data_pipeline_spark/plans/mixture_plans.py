@@ -43,16 +43,11 @@ SQRT_SCALE = 1_000_000  # fixed-point scale for floor(sqrt(n) * SCALE)
 PPM = 1_000_000  # weights reported in parts-per-million
 SAMPLE_BUDGET = 1_000_000  # tokens to allocate across sources
 
-# empty-token filter matches functions/text.tokens: a whitespace-only
-# doc must count zero tokens in both engines
-_TOKS = (
-    "list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '')"
-)
 
 _ORACLE = f"""
 WITH per_source AS (
   SELECT source,
-         CAST(SUM(len({_TOKS})) AS BIGINT) AS tokens
+         CAST(SUM(len({T.tokens_sql()})) AS BIGINT) AS tokens
   FROM documents GROUP BY source
 ), scaled AS (
   SELECT source, tokens,

@@ -49,18 +49,12 @@ from .core import REGISTRY
 PACK_BUDGET = 96
 PACK_SHARDS = 8
 
-# filtered form (repo-wide standard): the bare split counts a phantom
-# '' token for empty/whitespace-only documents, while the Spark side
-# (T.token_count) drops empties — a silent gate break if an empty doc
-# ever enters a fixture
-_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '')"
-
 
 @REGISTRY.add(
     "seq_packing_manifest",
     f"""
     WITH t AS (
-      SELECT doc_id, len({_TOKS}) AS n FROM documents
+      SELECT doc_id, len({T.tokens_sql()}) AS n FROM documents
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS docs,
            CAST(SUM(n) AS BIGINT) AS total_tokens,

@@ -40,8 +40,6 @@ from ..functions import text as T
 from ..sources.tables import load_table, spread
 from .core import REGISTRY
 
-# tokenizer twin of T.tokens(text) (whitespace split, ''-guard)
-_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '')"
 
 # the five moment sums, HUGEINT-exact (DuckDB SUM(BIGINT) -> HUGEINT)
 _MOMENTS_SQL = """
@@ -54,7 +52,7 @@ _MOMENTS_SQL = """
              SUM(x*y) AS sxy, SUM(x*x) AS sxx, SUM(y*y) AS syy
       FROM b GROUP BY lang
     )
-""".format(toks=_TOKS)
+""".format(toks=T.tokens_sql())
 
 
 @REGISTRY.add(

@@ -47,33 +47,15 @@ TOP_WORD_PCT = 20
 TOP_BIGRAM_PCT = 10
 DUP_TRIGRAM_PCT = 5
 
-# the empty-token filter matches functions/text.tokens (Spark side):
-# without it a whitespace-only document yields one phantom '' token
-# in DuckDB only and the engines diverge on docs/words/gate counts
-_TOKS = (
-    "list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '')"
-)
-
-
-def _grams_sql(n: int) -> str:
-    if n == 1:
-        return "w"
-    join = " || ' ' || ".join(f"w[i+{j}]" for j in range(n))
-    return (
-        f"list_transform(generate_series(1, len(w) - {n - 1}), "
-        f"i -> {join})"
-    )
-
-
 _ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, source, {_TOKS} AS w FROM documents
+  SELECT doc_id, source, {T.tokens_sql()} AS w FROM documents
 ), grams AS (
-  SELECT doc_id, source, 1 AS k, unnest({_grams_sql(1)}) AS g FROM toks
+  SELECT doc_id, source, 1 AS k, unnest(w) AS g FROM toks
   UNION ALL
-  SELECT doc_id, source, 2, unnest({_grams_sql(2)}) FROM toks
+  SELECT doc_id, source, 2, unnest({T.word_ngrams_sql("w", 2)}) FROM toks
   UNION ALL
-  SELECT doc_id, source, 3, unnest({_grams_sql(3)}) FROM toks
+  SELECT doc_id, source, 3, unnest({T.word_ngrams_sql("w", 3)}) FROM toks
 ), gc AS (
   SELECT doc_id, source, k, g, COUNT(*) AS c
   FROM grams GROUP BY 1, 2, 3, 4
@@ -142,52 +124,25 @@ def doc_repetition_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     ).repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    return _gates_report(tagged_gram_stream(d))
-
-
-def tagged_gram_stream(d: DataFrame) -> DataFrame:
-    """(doc_id, source, k, g) stream of 1/2/3-grams per document.
-
-    Built as two nested codegen generators instead of interpreted
-    higher-order functions (r12, guide §4.4/§1.2 — HOFs evaluate
-    interpreted, outside whole-stage codegen): the old form built
-    three transform()-tagged gram arrays per document and concat'd
-    them before one explode; this form explodes token positions
-    (Generate, codegen), derives each position's 1/2/3-gram with
-    element_at/get + null-propagating concat (get returns NULL past
-    the array end, and concat of any NULL is NULL, so the short grams
-    at the document tail drop out in the g-not-null filter), and
-    inlines the three (k, gram) structs per position. Same
-    (doc, k, gram) stream row-for-row as the HOF form — measured
-    0.81 -> 0.48 s at sf0.1 with identical gram-stream counts per k
-    (parity pinned by tests/test_r12_opt.py).
-    """
-    t = d.select("doc_id", "source", T.tokens("text").alias("toks")).where(
-        F.size("toks") >= 1
+    # every token position opens one window carrying its 1-, 2- and
+    # 3-gram; the two trailing windows run past the end, so their
+    # longer grams are NULL and drop out
+    w = T.token_windows(
+        d, T.tokens("text"), 3, "doc_id", "source", pad=(0, 2)
     )
-    i = F.col("i")
-    gen = t.select(
-        "doc_id",
-        "source",
-        "toks",
-        F.explode(F.sequence(F.lit(1), F.size("toks"))).alias("i"),
-    )
-    g1 = F.element_at("toks", i)  # i from sequence(1, size): in range
-    w1 = F.get("toks", i)  # 0-based get = token i+1 (1-based); NULL OOB
-    w2 = F.get("toks", i + 1)  # token i+2; NULL OOB
-    g2 = F.concat(g1, F.lit(" "), w1)
-    g3 = F.concat(g1, F.lit(" "), w1, F.lit(" "), w2)
-    return gen.select(
+    grams = w.select(
         "doc_id",
         "source",
         F.inline(
             F.array(
-                F.struct(F.lit(1).alias("k"), g1.alias("g")),
-                F.struct(F.lit(2).alias("k"), g2.alias("g")),
-                F.struct(F.lit(3).alias("k"), g3.alias("g")),
+                *[
+                    F.struct(F.lit(k).alias("k"), T.window_gram(k).alias("g"))
+                    for k in (1, 2, 3)
+                ]
             )
         ),
     ).where(F.col("g").isNotNull())
+    return _gates_report(grams)
 
 
 def _gates_report(exploded: DataFrame) -> DataFrame:

@@ -40,15 +40,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..operators.neardup import shingle_sets_sql
 from ..sources.tables import load_table, spread
 from .core import REGISTRY
-from .dedup_plans import (
-    _GRAMS,
-    _TOKS,
-    PPJ_T_DEN,
-    PPJ_T_NUM,
-    shingle_h120,
-)
+from .dedup_plans import PPJ_T_DEN, PPJ_T_NUM, shingle_h120
 
 #: window span (each record compares to the next W-1 in sorted order)
 SNM_W = 4
@@ -57,7 +52,7 @@ SNM_BLOCK_CHARS = 1
 
 
 def _key_sql(largest: bool) -> str:
-    arr = f"list_sort(list_distinct({_TOKS}))"
+    arr = f"list_sort(list_distinct({T.tokens_sql()}))"
     if largest:
         arr = f"list_reverse({arr})"
     return f"array_to_string(list_slice({arr}, 1, 3), ' ')"
@@ -93,8 +88,7 @@ def _pass_sql(largest: bool) -> str:
         {_pass_sql(True)}
       )
     ), grams AS (
-      SELECT doc_id, {_GRAMS} AS g
-      FROM (SELECT doc_id, {_TOKS} AS t FROM documents)
+      {shingle_sets_sql()}
     )
     SELECT c.doc_a, c.doc_b,
            CAST(len(list_intersect(ga.g, gb.g)) AS BIGINT) AS inter,

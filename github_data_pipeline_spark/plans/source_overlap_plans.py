@@ -24,29 +24,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..operators.neardup import shingle_sets_sql
 from ..sources.tables import load_table, spread
 from .core import REGISTRY
 
 TOP_PAIRS = 100
-
-# same tokenizer + 3-gram shingle rendering as the document dedup
-# family (plans/dedup_plans.py), so "overlap" means the same thing at
-# both granularities
-_TOKS = "string_split_regex(trim(text), '\\s+')"
-_GRAMS = (
-    "list_distinct(list_transform(generate_series(1, greatest(len(t)-2, 0)),"
-    " i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))"
-)
 
 
 @REGISTRY.add(
     "source_shingle_overlap",
     f"""
     WITH ss AS (
-      SELECT DISTINCT source, s FROM (
-        SELECT source, unnest({_GRAMS}) AS s
-        FROM (SELECT source, {_TOKS} AS t FROM documents)
-      )
+      SELECT DISTINCT source, unnest(g) AS s
+      FROM ({shingle_sets_sql("source")})
     ), sizes AS (
       SELECT source, COUNT(*) AS n FROM ss GROUP BY 1
     ), postings AS (
@@ -88,9 +78,9 @@ def source_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(
         load_table(spark, sf_dir, "documents").select("source", "text")
     )
-    grams = F.array_distinct(T.word_ngrams(T.tokens("text"), 3))
     ss = (
-        d.select("source", F.explode(grams).alias("s"))
+        T.token_windows(d, T.tokens("text"), 3, "source")
+        .select("source", T.window_gram(3).alias("s"))
         .distinct()
     )
     posting = ss.groupBy("s").agg(

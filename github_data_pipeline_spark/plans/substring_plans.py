@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import text as T
 from ..operators.substring_dedup import DEFAULT_WINDOW, duplicate_spans
 from ..sources.tables import load_table, spread
 from .core import REGISTRY
@@ -23,12 +24,12 @@ from .core import REGISTRY
 _N = DEFAULT_WINDOW  # 8-token windows
 
 _ORACLE = f"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-      FROM documents
+    WITH wins AS (
+      SELECT doc_id, {T.word_ngrams_sql("t", _N)} AS w
+      FROM (SELECT doc_id, {T.tokens_sql()} AS t FROM documents)
     ), grams AS (
-      SELECT doc_id, i - 1 AS start, array_to_string(t[i:i+{_N - 1}], ' ') AS g
-      FROM toks, UNNEST(generate_series(1, len(t) - {_N - 1})) AS u(i)
+      SELECT doc_id, i - 1 AS start, w[i] AS g
+      FROM wins, UNNEST(generate_series(1, len(w))) AS u(i)
     ), owners AS (
       SELECT g, MIN(doc_id) AS owner FROM grams GROUP BY g
     ), flagged AS (

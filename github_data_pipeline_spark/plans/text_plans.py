@@ -28,8 +28,6 @@ _add = REGISTRY.add
 
 # DuckDB fragments shared by the oracles ----------------------------------
 
-_TOKS = "string_split_regex(trim(text), '\\s+')"
-
 _POLY = (
     "list_transform({toks}, t -> "
     "(length(t)*961 + ascii(substr(t,1,1))*31 + ascii(substr(t,-1,1)))::BIGINT)"
@@ -51,10 +49,12 @@ def _duck_marker_hits(markers: tuple[str, ...]) -> str:
       doc_id,
       CAST(len(toks) AS BIGINT) AS token_cnt,
       CAST(len(list_distinct(toks)) AS BIGINT) AS uniq_tokens,
-      CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT) AS token_chars,
-      CAST(list_reduce({_POLY.format(toks='toks')}, (a, b) -> (a*31 + b) % 1000003) AS BIGINT)
+      CAST(COALESCE(list_sum(list_transform(toks, t -> length(t))), 0) AS BIGINT)
+        AS token_chars,
+      CAST(list_reduce(list_prepend(0, {_POLY.format(toks='toks')}),
+                       (a, b) -> (a*31 + b) % 1000003) AS BIGINT)
         AS fingerprint
-    FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+    FROM (SELECT doc_id, {T.tokens_sql()} AS toks FROM documents)
     """,
     doc="Per-document token statistics and identity in one narrow "
     "map-only pass: whitespace tokenization, distinct count, character "
@@ -92,7 +92,7 @@ _SCORE_ROWS = ", ".join(
     WITH scored AS (
       SELECT doc_id, lang,
       {_MARKER_SCORE_COLS}
-      FROM (SELECT doc_id, lang, {_TOKS} AS toks FROM documents)
+      FROM (SELECT doc_id, lang, {T.tokens_sql()} AS toks FROM documents)
     ), ranked AS (
       SELECT doc_id, lang, s.cand AS predicted,
         ROW_NUMBER() OVER (
@@ -134,7 +134,7 @@ _EN_STOPS = ", ".join(f"'{w}'" for w in T.EN_STOPWORDS)
         list_sum(list_transform(toks, t -> length(t))) AS token_chars,
         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS bpe_cnt,
         length(text) AS chars
-      FROM (SELECT source, text, {_TOKS} AS toks FROM documents)
+      FROM (SELECT source, text, {T.tokens_sql()} AS toks FROM documents)
     )
     SELECT
       source,
@@ -219,7 +219,7 @@ def doc_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                NTILE(10) OVER (
                  PARTITION BY source ORDER BY len(toks) DESC, doc_id ASC
                ) AS decile
-        FROM (SELECT source, doc_id, {_TOKS} AS toks FROM documents)
+        FROM (SELECT source, doc_id, {T.tokens_sql()} AS toks FROM documents)
       ) WHERE decile = 1
       GROUP BY source
     )

@@ -42,7 +42,6 @@ from .core import REGISTRY
 WL_FP = 10**6
 
 _STOPS = ", ".join(f"'{w}'" for w in T.EN_STOPWORDS)
-_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '')"
 
 #: (name, DuckDB vote expression over the feature CTE columns
 #: t/s/u/c/lang) — the Spark twin builds the same votes from the same
@@ -109,7 +108,7 @@ def _per_lf_counters_sql() -> str:
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c
-      FROM (SELECT lang, {_TOKS} AS toks FROM documents)
+      FROM (SELECT lang, {T.tokens_sql()} AS toks FROM documents)
     ), votes AS (
       SELECT {", ".join(f"({expr}) AS v{i}"
                         for i, (_n, expr) in enumerate(LF_SQL))}

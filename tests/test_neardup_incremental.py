@@ -133,14 +133,17 @@ def test_persisted_bucketed_index_roundtrip(spark, sf_dir):
 def test_array_signatures_equal_row_signatures(spark, sf_dir):
     """The shuffle-free array-fold signature path must produce exactly
     the row-path signatures (same docs, same sig components)."""
+    from github_data_pipeline_spark.functions import text as T
     from github_data_pipeline_spark.operators.neardup import (
-        doc_shingle_arrays,
         minhash_signatures_from_arrays,
     )
 
     docs = _docs(spark, sf_dir)
     row_sigs = minhash_signatures(doc_shingles(docs))
-    arr_sigs = minhash_signatures_from_arrays(doc_shingle_arrays(docs))
+    arrays = docs.select(
+        "doc_id", F.array_distinct(T.word_ngrams(T.tokens("text"), 3)).alias("g")
+    )
+    arr_sigs = minhash_signatures_from_arrays(arrays)
     cols = ["doc_id"] + [f"sig{i}" for i in range(MINHASH_K)]
     a = {tuple(r) for r in row_sigs.select(*cols).collect()}
     b = {tuple(r) for r in arr_sigs.select(*cols).collect()}
@@ -213,10 +216,8 @@ def test_capped_incremental_components_equal_full(spark):
     from github_data_pipeline_spark.operators.neardup import (
         band_index,
         bucket_stats,
-        doc_shingle_arrays,
         incremental_lsh_candidates_capped,
         lsh_candidates_capped,
-        minhash_signatures_from_arrays,
     )
 
     hot = "alpha beta gamma delta epsilon zeta"
@@ -230,7 +231,7 @@ def test_capped_incremental_components_equal_full(spark):
 
     def bands(d):
         return band_index(
-            minhash_signatures_from_arrays(doc_shingle_arrays(d))
+            minhash_signatures(doc_shingles(d))
         )
 
     CAP = 8
@@ -312,9 +313,7 @@ def test_capped_persisted_roundtrip(spark):
         append_band_index,
         band_index,
         bucket_stats,
-        doc_shingle_arrays,
         incremental_candidates_vs_index_capped,
-        minhash_signatures_from_arrays,
         persist_band_index,
         persist_bucket_stats,
     )
@@ -327,7 +326,7 @@ def test_capped_persisted_roundtrip(spark):
 
     def bands(d):
         return band_index(
-            minhash_signatures_from_arrays(doc_shingle_arrays(d))
+            minhash_signatures(doc_shingles(d))
         )
 
     idx = f"nd_idx_{uuid.uuid4().hex[:8]}"

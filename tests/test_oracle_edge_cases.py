@@ -26,9 +26,11 @@ def _docs_pdf(rows):
     )
 
 
-def _run_both(spark, module_name, query_name, pdf):
+def _run_both(spark, module_name, query_name, pdf, sf_dir="unused"):
     """Run the registry builder (load_table patched to the adversarial
-    frame) and its DuckDB oracle over the same rows."""
+    frame) and its DuckDB oracle over the same rows. Builders that size
+    joins from the parquet footer need ``sf_dir`` to hold the rows as
+    ``documents.parquet``."""
     import importlib
 
     from github_data_pipeline_spark.plans import all_plans
@@ -42,7 +44,7 @@ def _run_both(spark, module_name, query_name, pdf):
     try:
         q = all_plans()[query_name]
         spark_rows = {
-            tuple(r) for r in q.builder(spark, "unused").collect()
+            tuple(r) for r in q.builder(spark, sf_dir).collect()
         }
     finally:
         mod.load_table = orig
@@ -59,7 +61,40 @@ ADVERSARIAL = [
     ("srcB", ""),  # empty text
     ("srcB", "aa aa bb aa aa bb cc"),
     ("srcB", "\t\n  \n"),
+    ("srcA", "\tthe cat sat on the mat"),  # leading tab: leading ''
+    ("srcA", "one two three four five six seven eight nine\n"),  # trailing ''
+    ("srcA", ""),
+    ("srcB", "zero one two three four five six seven eight nine\n"),
 ]
+
+# Oracles built on functions/text.tokens_sql that read only documents:
+# each must agree with T.tokens on text that starts or ends with
+# non-space whitespace, and on empty text.
+TOKENIZER_TWIN_ENTRIES = [
+    ("text_plans", "doc_token_profile"),
+    ("text_plans", "lang_id_confusion"),
+    ("text_plans", "doc_quality_by_source"),
+    ("text_plans", "doc_sampling_gates"),
+    ("mining_plans", "doc_dup_ngram_rate"),
+    ("substring_plans", "substring_dup_spans"),
+    ("source_overlap_plans", "source_shingle_overlap"),
+    ("dedup_plans", "neardup_jaccard_pairs"),
+    ("dedup_plans", "neardup_cluster_keepers"),
+    ("dedup_plans", "minhash_lsh_candidates"),
+    ("dedup_plans", "jaccard_prefix_filter_pairs"),
+    ("snm_plans", "snm_neardup_pairs"),
+    ("lsh_incremental_plans", "lsh_incremental_index"),
+    ("lsh_incremental_plans", "lsh_capped_star_components"),
+    ("curation_plans", "decontam_overlap"),
+]
+
+
+@pytest.mark.parametrize("module_name,query_name", TOKENIZER_TWIN_ENTRIES)
+def test_tokenizer_twin_edge_docs(spark, tmp_path, module_name, query_name):
+    pdf = _docs_pdf(ADVERSARIAL)
+    pdf.to_parquet(tmp_path / "documents.parquet")
+    got, want = _run_both(spark, module_name, query_name, pdf, str(tmp_path))
+    assert got == want
 
 
 def test_repetition_gates_whitespace_only_docs(spark):

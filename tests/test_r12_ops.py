@@ -19,11 +19,11 @@ from github_data_pipeline_spark.operators.components import (
 from github_data_pipeline_spark.operators.neardup import (
     band_index,
     bucket_stats,
-    doc_shingle_arrays,
+    doc_shingle_stream,
     incremental_lsh_candidates_capped,
     lsh_candidates,
     lsh_candidates_capped,
-    minhash_signatures_from_arrays,
+    minhash_signatures,
 )
 from github_data_pipeline_spark.plans.lsh_incremental_plans import STAR_CAP
 from github_data_pipeline_spark.sources.tables import load_table
@@ -36,10 +36,10 @@ def _entry_stages(spark, sf_dir):
     corpus = d.filter(F.col("doc_id") <= thr)
     batch = d.filter(F.col("doc_id") > thr)
     index = band_index(
-        minhash_signatures_from_arrays(doc_shingle_arrays(corpus))
+        minhash_signatures(doc_shingle_stream(corpus, distinct=False))
     ).localCheckpoint()
     all_bands = band_index(
-        minhash_signatures_from_arrays(doc_shingle_arrays(d))
+        minhash_signatures(doc_shingle_stream(d, distinct=False))
     ).localCheckpoint()
     return thr, batch, index, all_bands
 

@@ -14,9 +14,6 @@ from pyspark.sql import functions as F
 
 from github_data_pipeline_spark.curation import neardup_drop_stage
 from github_data_pipeline_spark.functions import text as T
-from github_data_pipeline_spark.plans.repetition_plans import (
-    tagged_gram_stream,
-)
 
 
 def test_neardup_drop_stage_toks_col_parity(spark):
@@ -88,51 +85,3 @@ def test_bench_drops_leftover_rdd_blocks(spark):
     assert sc.getPersistentRDDs().size() >= 1
     _drop_leftover_rdd_blocks(spark)
     assert sc.getPersistentRDDs().size() == 0
-
-
-def test_tagged_gram_stream_matches_hof_form(spark):
-    """The repetition-gates gram stream moved from interpreted
-    transform()-built gram arrays to nested codegen generators
-    (explode(sequence) + inline + element_at/get). The (doc, source,
-    k, gram) multiset must be identical to the old HOF construction,
-    including the document-tail short grams (dropped via
-    null-propagating concat) and empty/whitespace-only documents
-    (dropped entirely by both forms)."""
-    docs = spark.createDataFrame(
-        [
-            (1, "srcA", "the cat sat on the mat the cat sat"),
-            (2, "srcA", "   "),  # whitespace-only: no tokens
-            (3, "srcB", ""),  # empty
-            (4, "srcB", "one"),  # single token: no bigrams/trigrams
-            (5, "srcB", "aa bb"),  # two tokens: one bigram, no trigram
-            (6, "srcB", "aa aa bb aa aa bb cc"),
-        ],
-        "doc_id long, source string, text string",
-    )
-    toks = T.tokens("text")
-
-    def tagged(arr, k):
-        return F.transform(
-            arr, lambda g: F.struct(F.lit(k).alias("k"), g.alias("g"))
-        )
-
-    hof = docs.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.concat(
-                tagged(toks, 1),
-                tagged(T.word_ngrams(toks, 2), 2),
-                tagged(T.word_ngrams(toks, 3), 3),
-            )
-        ).alias("p"),
-    ).select("doc_id", "source", "p.k", "p.g")
-    want = sorted(map(tuple, hof.collect()))
-    got = sorted(map(tuple, tagged_gram_stream(docs).collect()))
-    assert got == want
-    # non-vacuity: every k present, tail grams really dropped
-    ks = {r[2] for r in got}
-    assert ks == {1, 2, 3}
-    assert (4, "srcB", 1, "one") in got
-    assert not any(r[0] == 4 and r[2] > 1 for r in got)
-    assert not any(r[0] in (2, 3) for r in got)

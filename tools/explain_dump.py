@@ -1,5 +1,10 @@
 """Dump ``explain("formatted")`` for registry queries to files.
 
+Each file holds the final plan followed by every plan the builder
+checkpointed on the way (``tools/plan_audit.explain_builder``): a
+checkpoint truncates lineage, so the work upstream of it shows only
+there.
+
 Round-12 optimization evidence: the judge checks plan claims
 (Exchange counts, join strategies, PushedFilters, Python stages)
 against committed ``plans/<round>/<query>_<tag>.txt`` files (round dir
@@ -21,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     from github_data_pipeline_spark.plans import all_plans
     from github_data_pipeline_spark.session import get_spark
+    from tools.plan_audit import explain_builder
 
     tag = sys.argv[1]
     names = sys.argv[2:]
@@ -37,14 +43,14 @@ def main() -> int:
     if names == ["--all"]:
         names = [q.name for q in registry if q.oracle is not None]
     for name in names:
-        df = registry[name].builder(spark, sf_dir)
-        text = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = explain_builder(spark, registry[name].builder, sf_dir)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(f"-- {name} @ {sf_dir} ({tag})\n")
-            f.write(text)
+            f.write(plan.formatted)
+            for i, (_simple, formatted) in enumerate(plan.pre_checkpoint, 1):
+                f.write(f"\n-- pre-checkpoint subplan {i}\n")
+                f.write(formatted)
         print(f"wrote {path}")
     return 0
 
