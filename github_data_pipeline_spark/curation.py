@@ -2,19 +2,19 @@
 
     raw -> clean (line-dedup + normalize) -> language gate
         -> quality gate -> repetition gate -> near-dup drop
-        -> budget sample
 
 Each stage is one of the engine's first-class operators (functions/
-text.py, operators/neardup.py, operators/budget.py, plans/dedup
-semantics); this module composes them into the single DataFrame
-pipeline a training-data team actually runs, plus a funnel report of
-per-stage survivors. Everything stays declarative: the only shuffles
-are the near-dup stage's (shingle + band join); every gate before it
-is a map-side filter that Catalyst pushes toward the scan.
+text.py, operators/neardup.py, plans/dedup semantics); this module
+composes them into the one funnel every batch caller runs — the data
+build, ``run_pipeline.py --curate``, the incremental update and the
+registry's ``curation_funnel_report``: :func:`gate` computes the
+per-document gate flags in one scan and materializes the gate
+survivors, :func:`funnel` adds the near-dup drop and the per-stage
+survivor counts. The only shuffles are the near-dup stage's (shingle +
+band join).
 
-At 100 TB each arrow is the same plan — the gates filter before the
-expensive dedup so the shingle shuffle sees only surviving docs, and
-the final sample is a hash predicate, not a collect.
+At 100 TB each arrow is the same plan — the gates run before the
+expensive dedup so the shingle shuffle sees only surviving docs.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions import text as T
-from .operators.budget import budget_sample
 from .operators.components import connected_components
 from .operators.hints import broadcast_if_bounded
 from .operators.neardup import (
@@ -43,9 +42,8 @@ def clean_stage(docs: DataFrame) -> DataFrame:
     return out.filter(F.length("text") > 0)
 
 
-# Gate PREDICATES over a token-array column — the single definition each
-# stage filter AND the one-scan funnel report share, so the two paths
-# cannot drift.
+# Gate PREDICATES over a token-array column — the single definition of
+# each gate, evaluated once per document by :func:`gate`.
 
 
 def language_pred(toks, lang: str = "en"):
@@ -68,23 +66,6 @@ def repetition_pred(toks, n: int = 2, max_frac: float = 0.2):
     return T.max_ngram_repetition(toks, n) <= max_frac
 
 
-def repetition_stage(docs: DataFrame, n: int = 2, max_frac: float = 0.2) -> DataFrame:
-    """Drop looping documents (see :func:`repetition_pred`)."""
-    return docs.filter(repetition_pred(T.tokens("text"), n, max_frac))
-
-
-def language_stage(docs: DataFrame, lang: str = "en") -> DataFrame:
-    """Keep docs whose marker-argmax language matches ``lang``."""
-    return docs.filter(language_pred(T.tokens("text"), lang))
-
-
-def quality_stage(
-    docs: DataFrame, min_tokens: int = 20, max_tokens: int = 400
-) -> DataFrame:
-    """Length window + stopword-ratio gate (see :func:`quality_pred`)."""
-    return docs.filter(quality_pred(T.tokens("text"), min_tokens, max_tokens))
-
-
 def neardup_drop_stage(docs: DataFrame, toks_col: str | None = None) -> DataFrame:
     """Keep one canonical doc per near-dup CLUSTER.
 
@@ -104,8 +85,7 @@ def neardup_drop_stage(docs: DataFrame, toks_col: str | None = None) -> DataFram
     """
     # One evaluation of the tokenize + 3-gram + distinct fold: grams
     # feed THREE consumers (signatures, verify side a, verify side b)
-    # — uncheckpointed, each re-ran the fold over the full upstream
-    # (which in the funnel includes the repetition-gate array fold).
+    # — uncheckpointed, each re-ran the fold over the full upstream.
     # Survivor-bounded like the stage's other materializations.
     # When the caller already materialized the token arrays (the funnel
     # checkpoints them on its survivor boundary), read them instead of
@@ -139,34 +119,6 @@ def neardup_drop_stage(docs: DataFrame, toks_col: str | None = None) -> DataFram
     return docs.join(
         broadcast_if_bounded(dups, n_dups), "doc_id", "left_anti"
     )
-
-
-def curate(
-    docs: DataFrame,
-    lang: str = "en",
-    sample_rates: dict[str, float] | None = None,
-) -> tuple[DataFrame, list[tuple[str, DataFrame]]]:
-    """Run the full funnel; returns (final_docs, named stage outputs)."""
-    stages: list[tuple[str, DataFrame]] = [("raw", docs)]
-    cur = clean_stage(docs)
-    stages.append(("cleaned_nonempty", cur))
-    cur = language_stage(cur, lang)
-    stages.append(("language", cur))
-    cur = quality_stage(cur)
-    stages.append(("quality", cur))
-    cur = repetition_stage(cur)
-    stages.append(("repetition", cur))
-    cur = neardup_drop_stage(cur)
-    stages.append(("neardup_dropped", cur))
-    if sample_rates is not None:
-        cur = budget_sample(cur, sample_rates)
-        stages.append(("budget_sample", cur))
-    return cur, stages
-
-
-def funnel_report(stages: list[tuple[str, DataFrame]]) -> list[tuple[str, int]]:
-    """Per-stage survivor counts (one job per stage; report-only path)."""
-    return [(name, df.count()) for name, df in stages]
 
 
 def materialize_boundary(
@@ -210,37 +162,32 @@ def materialize_boundary(
     raise ValueError(f"unknown boundary store {store!r}")
 
 
-def funnel_survivor_counts(
+def gate(
     docs: DataFrame,
     lang: str = "en",
     survivor_store: str = "checkpoint",
     scratch_dir: str | None = None,
-) -> DataFrame:
-    """(stage_idx, stage, survivors): the funnel report as ONE
-    DataFrame, built so executing it costs O(gate survivors), not six
-    re-runs of the whole funnel.
+) -> tuple[DataFrame, DataFrame]:
+    """(flags, survivors): the clean, language, quality and repetition
+    gates over ``docs``, each document feature computed once.
 
-    A naive report (count each stage of :func:`curate`) re-evaluates
-    the cleaning regexes and gate folds once PER STAGE — measured 65 s
-    where this shape costs ~6 s at sf0.1. Structure:
+    A filter chain cannot do that: predicate pushdown puts a
+    projection's definition back into every predicate, so each gate
+    would re-run the cleaning regexes and the tokenizer over the raw
+    text. Structure:
 
     * one corpus scan computes the cleaned text and the cheap gate
-      flags (language, quality), checkpointed as a tiny
-      (doc_id, lang_ok, qual_ok) table — stage counts 1-3 are sums
-      over it, costing nothing more;
-    * survivor TEXT is re-derived by semi-joining the survivor ids
-      against the raw scan, so the cleaning expressions run a second
-      time on gate SURVIVORS only (Catalyst pushes the id join below
-      the heavy projection); the expensive repetition fold runs only
-      there — the materialized boundary a production funnel persists
-      between its gate and dedup phases anyway;
-    * the near-dup stage (the usual LSH -> verify -> components) then
-      operates entirely on the checkpointed survivor table.
+      flags, checkpointed as the small ``flags`` table
+      (doc_id, lang_ok, qual_ok) over the cleaned non-empty docs;
+    * survivor TEXT is re-derived by semi-joining the gate survivor
+      ids against ``docs``, so the cleaning expressions run a second
+      time on gate SURVIVORS only, and the tokens and the repetition
+      flag are computed there once. That is the one materialization
+      whose size is corpus-scale; its storage is caller-chosen (see
+      :func:`materialize_boundary`).
 
-    Gate semantics come from the SAME predicate functions the stage
-    filters use (language_pred / quality_pred / repetition_pred), so
-    this report and :func:`curate` cannot drift.
-    """
+    ``survivors`` keeps every column of ``docs`` with ``text``
+    cleaned, plus its token array ``toks``."""
     cleaned = clean_stage(docs)
     toks = T.tokens("text")
     flags = cleaned.select(
@@ -252,37 +199,36 @@ def funnel_survivor_counts(
         "doc_id"
     )
     n_surv = surv_ids.count()
-    # clean text recomputed for survivors only: the id semi-join sits
-    # below the projection, so the regexes touch |survivors| rows
-    # the survivor-TEXT boundary: the one funnel materialization whose
-    # size is corpus-scale (gate survivors x full text). Its storage is
-    # caller-chosen — localCheckpoint at bench SFs, DISK_ONLY or a
-    # parquet scratch table at 100 TB (see materialize_boundary).
     surv = materialize_boundary(
         clean_stage(
             docs.join(
                 broadcast_if_bounded(surv_ids, n_surv), "doc_id", "left_semi"
             )
-        ).select("doc_id", "text", T.tokens("text").alias("toks")),
+        )
+        .withColumn("toks", T.tokens("text"))
+        .withColumn("rep_ok", repetition_pred(F.col("toks"))),
         store=survivor_store,
         scratch_dir=scratch_dir,
         name="funnel_survivors",
     )
-    # The repetition fold runs ONCE: keep only the surviving ids (a
-    # doc_id-only checkpoint, trivially bounded) and re-derive rep by
-    # semi-joining the already-checkpointed surv table. Downstream
-    # consumers (gram build, keeper anti-join, stage-4 count) would
-    # otherwise each re-run the n-gram fold over every survivor.
-    rep_ids = (
-        surv.filter(repetition_pred(F.col("toks")))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    n_rep = rep_ids.count()
-    rep = surv.join(
-        broadcast_if_bounded(rep_ids, n_rep), "doc_id", "left_semi"
-    ).select("doc_id", "text", "toks")
-    kept = neardup_drop_stage(rep, toks_col="toks")
+    return flags, surv.filter(F.col("rep_ok")).drop("rep_ok")
+
+
+def funnel(
+    docs: DataFrame,
+    lang: str = "en",
+    survivor_store: str = "checkpoint",
+    scratch_dir: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(kept, counts): :func:`gate` then the near-dup drop.
+
+    ``kept`` is the gate survivors minus near-duplicates, with
+    ``toks``. ``counts`` is (stage_idx, stage, survivors), one row per
+    stage, built so executing it costs O(gate survivors): stages 1-3
+    are sums over the checkpointed flags, the repetition and near-dup
+    counts read the survivor boundary."""
+    flags, survivors = gate(docs, lang, survivor_store, scratch_dir)
+    kept = neardup_drop_stage(survivors, toks_col="toks")
 
     def row(idx: int, name: str, df: DataFrame) -> DataFrame:
         return df.agg(
@@ -302,14 +248,15 @@ def funnel_survivor_counts(
             "survivors",
         )
 
-    return (
+    counts = (
         row(0, "raw", docs)
         .unionByName(flag_row(1, "cleaned_nonempty", F.lit(True)))
         .unionByName(flag_row(2, "language", F.col("lang_ok")))
         .unionByName(
             flag_row(3, "quality", F.col("lang_ok") & F.col("qual_ok"))
         )
-        .unionByName(row(4, "repetition", rep_ids))
+        .unionByName(row(4, "repetition", survivors))
         .unionByName(row(5, "neardup_dropped", kept))
         .orderBy(F.asc("stage_idx"))
     )
+    return kept, counts

@@ -63,6 +63,12 @@ def stopword_hits(tok: Column, words: tuple[str, ...] = EN_STOPWORDS) -> Column:
     return F.size(F.filter(tok, lambda t: F.array_contains(wordset, F.lower(t))))
 
 
+def stopword_hits_sql(toks: str, words: tuple[str, ...] = EN_STOPWORDS) -> str:
+    """DuckDB twin of :func:`stopword_hits` over a list column ``toks``."""
+    wordset = ", ".join(f"'{w}'" for w in words)
+    return f"len(list_filter({toks}, t -> list_contains([{wordset}], lower(t))))"
+
+
 def char_count(tok: Column) -> Column:
     """Total characters across tokens (exact int, order-independent)."""
     return F.aggregate(tok, F.lit(0), lambda acc, t: acc + F.length(t))
@@ -76,18 +82,29 @@ def lang_scores(tok: Column) -> dict[str, Column]:
 def lang_id(tok: Column) -> Column:
     """Argmax language by marker hits; ties break lexicographically.
 
-    Implemented as a fold over languages in sorted order keeping the
-    strictly-greater score — identical logic is a CASE cascade in SQL.
-    """
+    One ``array_max`` over ``struct(score, -rank, lang)`` with the
+    languages in sorted order: a higher score wins, and among equal
+    scores the lower rank — the lexicographically first language."""
     scores = lang_scores(tok)
-    ordered = sorted(scores)  # lexicographic -> deterministic tiebreak
-    best_lang = F.lit(ordered[0])
-    best_score = scores[ordered[0]]
-    for lang in ordered[1:]:
-        is_better = scores[lang] > best_score
-        best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(is_better, scores[lang]).otherwise(best_score)
-    return best_lang
+    cands = [
+        F.struct(
+            scores[lang].alias("score"),
+            F.lit(-rank).alias("rank"),
+            F.lit(lang).alias("lang"),
+        )
+        for rank, lang in enumerate(sorted(scores))
+    ]
+    return F.array_max(F.array(*cands))["lang"]
+
+
+def lang_id_sql(toks: str) -> str:
+    """DuckDB twin of :func:`lang_id` over a list column ``toks``."""
+    cands = ", ".join(
+        f"{{'score': {stopword_hits_sql(toks, LANG_MARKERS[lang])}, "
+        f"'rank': {-rank}, 'lang': '{lang}'}}"
+        for rank, lang in enumerate(sorted(LANG_MARKERS))
+    )
+    return f"list_max([{cands}]).lang"
 
 
 def word_ngrams(tok: Column, n: int) -> Column:

@@ -56,8 +56,6 @@ W_STOP, W_TTR, W_LEN = 3, 2, 10
 # ways (score p25 = 13731 at sf0.01 -> ~75% pass / ~25% fail)
 SCORE_THRESHOLD = 13_700
 
-_STOPS = ", ".join(f"'{w}'" for w in T.EN_STOPWORDS)
-
 
 @_add(
     "doc_quality_linear_gate",
@@ -65,7 +63,7 @@ _STOPS = ", ".join(f"'{w}'" for w in T.EN_STOPWORDS)
     WITH f AS (
       SELECT source,
         len(toks) AS t,
-        len(list_filter(toks, x -> list_contains([{_STOPS}], lower(x))))
+        {T.stopword_hits_sql("toks")}
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c
@@ -253,7 +251,7 @@ PR_THRESHOLDS = (11_000, 12_500, 13_700, 15_000, 17_000)
     f"""
     WITH f AS (
       SELECT len(toks) AS t,
-        len(list_filter(toks, x -> list_contains([{_STOPS}], lower(x))))
+        {T.stopword_hits_sql("toks")}
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c
@@ -379,7 +377,7 @@ AUC_SCALE = 1_000_000
     f"""
     WITH f AS (
       SELECT len(toks) AS t,
-        len(list_filter(toks, x -> list_contains([{_STOPS}], lower(x))))
+        {T.stopword_hits_sql("toks")}
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c
@@ -513,7 +511,7 @@ CAL_FP = 10**12
 
 _CAL_SCORED_SQL = f"""f AS (
       SELECT len(toks) AS t,
-        len(list_filter(toks, x -> list_contains([{_STOPS}], lower(x))))
+        {T.stopword_hits_sql("toks")}
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c

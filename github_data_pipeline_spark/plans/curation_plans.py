@@ -222,7 +222,7 @@ def embedding_quantization_report(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --- the composed curation funnel, oracle-checked end-to-end -------------
 #
-# Every stage of curation.curate() is individually oracle-backed
+# Every stage of curation.funnel() is individually oracle-backed
 # elsewhere (cleaning regexes via doc_pii_scrub, lang-id via
 # lang_id_confusion, the quality gate via doc_quality_by_source,
 # repetition via doc_repetition_gates, LSH/verify via
@@ -235,16 +235,6 @@ def embedding_quantization_report(spark: SparkSession, sf_dir: str) -> DataFrame
 # counts must hash-equal. A single stage drifting (a regex dialect
 # divergence, a gate boundary, a band-key format) shifts a count.
 
-_FUNNEL_STAGES = (
-    "raw",
-    "cleaned_nonempty",
-    "language",
-    "quality",
-    "repetition",
-    "neardup_dropped",
-)
-
-
 def _funnel_oracle() -> str:
     from ..functions.text import (
         _CONTROL_RE,
@@ -254,24 +244,6 @@ def _funnel_oracle() -> str:
         _LONG_ID_RE,
     )
 
-    # functions/text.py twins over the funnel's evolving text column
-    lang_scores = {
-        lang: f"len(list_filter(toks, t -> list_contains("
-        f"[{', '.join(repr(w) for w in markers)}], lower(t))))"
-        for lang, markers in sorted(T.LANG_MARKERS.items())
-    }
-    # functions/text.lang_id fold semantics: 'en' survives iff strictly
-    # greater than every lexicographically EARLIER language and >= every
-    # LATER one (the fold replaces only on strictly-greater)
-    langs = sorted(lang_scores)
-    en_pos = langs.index("en")
-    en_wins = " AND ".join(
-        [f"s_en > s_{l}" for l in langs[:en_pos]]
-        + [f"s_{l} <= s_en" for l in langs[en_pos + 1:]]
-    )
-    score_cols = ",\n             ".join(
-        f"{expr} AS s_{lang}" for lang, expr in lang_scores.items()
-    )
     counts = ",\n      ".join(
         f"(SELECT CAST(COUNT(*) AS BIGINT) FROM {tbl}) AS c{i}"
         for i, tbl in enumerate(
@@ -314,18 +286,12 @@ WITH RECURSIVE lines AS (
 ), toked AS (
   SELECT doc_id, text, {T.tokens_sql()} AS toks
   FROM cleaned_nonempty
-), lang_scored AS (
-  SELECT doc_id, text, toks,
-             {score_cols}
-  FROM toked
 ), language AS (
-  SELECT doc_id, text, toks FROM lang_scored WHERE {en_wins}
+  SELECT doc_id, text, toks FROM toked WHERE {T.lang_id_sql("toks")} = 'en'
 ), quality AS (
   SELECT doc_id, text, toks FROM language
   WHERE len(toks) BETWEEN 20 AND 400
-    AND len(list_filter(toks,
-          t -> list_contains([{', '.join(repr(w) for w in T.EN_STOPWORDS)}],
-                             lower(t)))) * 10 >= len(toks)
+    AND {T.stopword_hits_sql("toks")} * 10 >= len(toks)
 ), bigram_stats AS (
   SELECT doc_id, MAX(c) AS mx, SUM(c) AS n FROM (
     SELECT doc_id, g, COUNT(*) AS c FROM (
@@ -394,24 +360,26 @@ ORDER BY stage_idx ASC
 @_add(
     "curation_funnel_report",
     _funnel_oracle(),
-    doc="The composed end-to-end curation funnel (curation.curate: "
+    doc="The composed end-to-end curation funnel (curation.funnel: "
     "line-dedup + 4-regex clean -> language argmax gate -> integer "
     "quality gate -> bigram repetition gate -> LSH near-dup drop), "
     "reported as per-stage survivor counts and oracle-checked as a "
     "WHOLE: the DuckDB side re-runs every stage including MinHash "
     "banding, exact-Jaccard verification and connected components "
     "over the surviving (cleaned) text, so a divergence in any stage "
-    "or in their composition shifts a count and fails the hash. Each "
-    "count is one aggregate over a prefix of the same declarative "
-    "pipeline; gates are map-side filters pushed toward the scan, so "
-    "the expensive shingle shuffle sees only gate survivors — the "
-    "100-TB shape. The candidate/dropped-id joins inside the near-dup "
-    "stage are size-gated broadcasts (curation.neardup_drop_stage). "
+    "or in their composition shifts a count and fails the hash. The "
+    "gate flags come from one scan and a checkpoint, the survivor text "
+    "is re-derived by semi-join and materialized once, so the "
+    "expensive shingle shuffle sees only gate survivors — the 100-TB "
+    "shape; the counts are aggregates over those boundaries. The "
+    "data build runs the same funnel. The candidate/dropped-id joins "
+    "inside the near-dup stage are size-gated broadcasts "
+    "(curation.neardup_drop_stage). "
     "Proves what per-stage entries cannot: the stages compose.",
     tags=("curation", "funnel", "dedup"),
 )
 def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..curation import funnel_survivor_counts
+    from ..curation import funnel
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return funnel_survivor_counts(docs, lang="en")
+    return funnel(docs.select("doc_id", "text"), lang="en")[1]

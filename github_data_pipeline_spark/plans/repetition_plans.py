@@ -4,7 +4,7 @@ Rae et al.'s Gopher data pipeline (arXiv:2112.11446, Table A1) filters
 documents by repetition statistics — fraction of the text occupied by
 the most frequent word / n-gram and by duplicated n-grams.  The
 curation module already applies a map-side single-gram gate
-(``curation.repetition_stage`` over
+(``curation.repetition_pred`` over
 ``functions/text.max_ngram_repetition``); this query is the
 oracle-checked, multi-gate REPORT form a pipeline runs to calibrate
 those thresholds, and it uses the distributed plan shape that also
@@ -103,7 +103,7 @@ FROM gated GROUP BY source
     "making both heavy aggregations exchange-free (doc_id leads every "
     "grouping key) — the gram stream never shuffles and a corpus-hot "
     "phrase cannot skew a partition (work is partitioned by document, "
-    "never by gram). Complements curation.repetition_stage (the map-side "
+    "never by gram). Complements curation.repetition_pred (the map-side "
     "array-fold gate): same family, the distributed shape for "
     "documents too large to fold per-row.",
     tags=("text", "quality", "repetition"),

@@ -34,11 +34,6 @@ _POLY = (
 )
 
 
-def _duck_marker_hits(markers: tuple[str, ...]) -> str:
-    lst = ", ".join(f"'{w}'" for w in markers)
-    return f"len(list_filter(toks, t -> list_contains([{lst}], lower(t))))"
-
-
 # --------------------------------------------------------------------------
 
 
@@ -78,11 +73,8 @@ def doc_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _MARKER_SCORE_COLS = ",\n      ".join(
-    f"{_duck_marker_hits(markers)} AS score_{lang}"
+    f"{T.stopword_hits_sql('toks', markers)} AS score_{lang}"
     for lang, markers in sorted(T.LANG_MARKERS.items())
-)
-_SCORE_ROWS = ", ".join(
-    f"('{lang}', score_{lang})" for lang in sorted(T.LANG_MARKERS)
 )
 
 
@@ -105,9 +97,10 @@ _SCORE_ROWS = ", ".join(
     GROUP BY lang, predicted
     """,
     doc="Language-ID confusion matrix: marker-word argmax (ties break "
-    "lexicographically) vs the labeled lang. The Spark side is a pure "
-    "expression fold (functions/text.py lang_id); the oracle re-ranks "
-    "per-language scores with ROW_NUMBER.",
+    "lexicographically) vs the labeled lang. The Spark side is one "
+    "array_max over (score, -rank, lang) structs (functions/text.py "
+    "lang_id); the oracle re-ranks per-language scores with "
+    "ROW_NUMBER, independently of that tie-break.",
     tags=("text", "langid"),
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,9 +113,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EN_STOPS = ", ".join(f"'{w}'" for w in T.EN_STOPWORDS)
-
-
 @_add(
     "doc_quality_by_source",
     f"""
@@ -130,7 +120,7 @@ _EN_STOPS = ", ".join(f"'{w}'" for w in T.EN_STOPWORDS)
       SELECT
         source,
         len(toks) AS token_cnt,
-        len(list_filter(toks, t -> list_contains([{_EN_STOPS}], lower(t)))) AS stop_hits,
+        {T.stopword_hits_sql("toks")} AS stop_hits,
         list_sum(list_transform(toks, t -> length(t))) AS token_chars,
         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS bpe_cnt,
         length(text) AS chars

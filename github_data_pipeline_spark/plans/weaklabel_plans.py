@@ -41,8 +41,6 @@ from .core import REGISTRY
 #: coverage fixed point: 1.0 -> 1e6
 WL_FP = 10**6
 
-_STOPS = ", ".join(f"'{w}'" for w in T.EN_STOPWORDS)
-
 #: (name, DuckDB vote expression over the feature CTE columns
 #: t/s/u/c/lang) — the Spark twin builds the same votes from the same
 #: integer features; keep the two in sync
@@ -104,7 +102,7 @@ def _per_lf_counters_sql() -> str:
     f"""
     WITH f AS (
       SELECT lang, len(toks) AS t,
-        len(list_filter(toks, x -> list_contains([{_STOPS}], lower(x))))
+        {T.stopword_hits_sql("toks")}
           AS s,
         len(list_distinct(toks)) AS u,
         COALESCE(list_sum(list_transform(toks, x -> length(x))), 0) AS c

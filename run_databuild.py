@@ -5,7 +5,7 @@ the order a data team actually runs them.
 
     documents.parquet
       -> curation funnel (clean -> language -> quality -> repetition
-         -> near-dup drop)                       [curation.curate]
+         -> near-dup drop)                       [curation.funnel]
       -> decontaminate vs the benchmark holdout  [operators/decontam]
       -> leakage-safe splits over the persisted near-dup pair
          artifact                                [operators/splits]
@@ -25,8 +25,9 @@ The benchmark holdout is the ``doc_id % 97 == 0`` slice — the same
 deterministic convention as the oracle-checked ``decontam_overlap``
 query, standing in for the external eval sets a real pipeline loads.
 
-Every stage before the near-dup shuffle is a map-side filter Catalyst
-pushes toward the scan; the pair table comes from the persisted
+The curation gates run in one scan whose flags are checkpointed, and
+only the gate survivors' text is re-derived and materialized for the
+near-dup shuffle; the pair table comes from the persisted
 artifact (built once per corpus, reused by every consumer); packing
 moves only (doc_id, n_tokens) longs through Arrow; shard writing is
 one shuffle on the shard id. The same invocation shape runs at any
@@ -68,7 +69,7 @@ def _both_endpoints_in(pairs, docs):
 def build(spark, sf_dir: str, out: str, n_shards: int, doc_filter=None) -> dict:
     from pyspark.sql import functions as F
 
-    from github_data_pipeline_spark.curation import curate, funnel_report
+    from github_data_pipeline_spark.curation import funnel
     from github_data_pipeline_spark.operators.decontam import decontaminate
     from github_data_pipeline_spark.operators.packing import pack_sequences
     from github_data_pipeline_spark.operators.sharding import (
@@ -95,17 +96,18 @@ def build(spark, sf_dir: str, out: str, n_shards: int, doc_filter=None) -> dict:
     # 1. curation funnel (the benchmark holdout never enters the corpus)
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
     benchmark = docs.filter(F.col("doc_id") % 97 == 0)
-    final, stages = curate(corpus)
+    kept, counts = funnel(corpus)
 
-    # 2. decontamination against the benchmark shingles
-    cleaned = decontaminate(final, benchmark, n=3, min_hits=DECONTAM_MIN_HITS)
-    stages.append(("decontaminated", cleaned))
-    # one materialization reused by every downstream count/write
-    cleaned = cleaned.localCheckpoint()
+    # 2. decontamination against the benchmark shingles; one
+    # materialization reused by every downstream count/write
+    cleaned = decontaminate(
+        kept.drop("toks"), benchmark, n=3, min_hits=DECONTAM_MIN_HITS
+    ).localCheckpoint()
 
-    funnel = funnel_report(stages)
+    stage_counts = [(r["stage"], r["survivors"]) for r in counts.collect()]
+    stage_counts.append(("decontaminated", cleaned.count()))
     with open(os.path.join(out, "funnel.json"), "w") as f:
-        json.dump(funnel, f, indent=1)
+        json.dump(stage_counts, f, indent=1)
 
     # 3. leakage-safe splits over the persisted pair artifact,
     # restricted to edges between SURVIVING docs (an edge to a
@@ -126,29 +128,34 @@ def build(spark, sf_dir: str, out: str, n_shards: int, doc_filter=None) -> dict:
     train = split_docs.filter(F.col("split") == "train")
 
     # 4. sequence packing (train only)
-    packs = pack_sequences(train, budget=512)
-    packs.write.mode("overwrite").parquet(os.path.join(out, "packs.parquet"))
+    packs_path = os.path.join(out, "packs.parquet")
+    pack_sequences(train, budget=512).write.mode("overwrite").parquet(
+        packs_path
+    )
 
     # 5. deterministic shards + manifest
     write_shards(train, os.path.join(out, "shards"), n_shards)
-    manifest = shard_manifest(assign_shards(train, n_shards))
-    manifest.write.mode("overwrite").parquet(
-        os.path.join(out, "manifest.parquet")
-    )
+    manifest_path = os.path.join(out, "manifest.parquet")
+    shard_manifest(assign_shards(train, n_shards)).write.mode(
+        "overwrite"
+    ).parquet(manifest_path)
 
     # invariants the run checks about itself (cheap at any scale:
-    # every count is an aggregate over an already-written artifact)
+    # every count is an aggregate over an already-written artifact or
+    # the checkpointed split table)
     split_counts = {
         r["split"]: r["n"]
         for r in split_docs.groupBy("split")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    pack_stats = packs.agg(
+    pack_stats = spark.read.parquet(packs_path).agg(
         F.sum("n_docs").alias("docs"),
         F.sum("total_tokens").alias("tokens"),
     ).collect()[0]
-    manifest_docs = manifest.agg(F.sum("docs")).collect()[0][0]
+    manifest_docs = (
+        spark.read.parquet(manifest_path).agg(F.sum("docs")).collect()[0][0]
+    )
     n_final = cleaned.count()
     n_train = train.count()
     report = {
@@ -204,13 +211,7 @@ def incremental_update(spark, sf_dir: str, out: str, new_pred) -> dict:
     """
     from pyspark.sql import functions as F
 
-    from github_data_pipeline_spark.curation import (
-        clean_stage,
-        language_stage,
-        neardup_drop_stage,
-        quality_stage,
-        repetition_stage,
-    )
+    from github_data_pipeline_spark.curation import gate, neardup_drop_stage
     from github_data_pipeline_spark.operators.decontam import decontaminate
     from github_data_pipeline_spark.operators.packing import pack_sequences
     from github_data_pipeline_spark.operators.sharding import (
@@ -243,9 +244,7 @@ def incremental_update(spark, sf_dir: str, out: str, new_pred) -> dict:
     new_raw = docs.filter(new_pred)
     benchmark = docs.filter(F.col("doc_id") % 97 == 0)
     new_corpus = new_raw.filter(F.col("doc_id") % 97 != 0)
-    new_gated = repetition_stage(
-        quality_stage(language_stage(clean_stage(new_corpus)))
-    )
+    new_gated = gate(new_corpus)[1].drop("toks")
     union = prev_docs.unionByName(new_gated.select(*prev_docs.columns))
     deduped = neardup_drop_stage(union).localCheckpoint()
     # decontam runs after dedup, mirroring build()'s stage order. Two

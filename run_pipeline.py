@@ -167,17 +167,17 @@ def main() -> None:
         print(f"  {label}: {[tuple(r) for r in spark.sql(sql).collect()]}")
 
     if args.curate:
-        from github_data_pipeline_spark.curation import curate, funnel_report
+        from github_data_pipeline_spark.curation import funnel
         from github_data_pipeline_spark.sources.tables import (
             load_table,
             spread,
         )
 
         docs = spread(load_table(spark, args.curate, "documents"))
-        _, stages = curate(docs)
+        _, counts = funnel(docs.select("doc_id", "text"))
         print(f"\ncuration funnel over {args.curate}/documents.parquet:")
-        for name, n in funnel_report(stages):
-            print(f"  {name:18s} {n:7d} docs")
+        for r in counts.collect():
+            print(f"  {r['stage']:18s} {r['survivors']:7d} docs")
 
 
 if __name__ == "__main__":

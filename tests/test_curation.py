@@ -1,8 +1,13 @@
-"""Curation surface: text cleaning (functions/text.py) and training-mix
-budget allocation (operators/budget.py)."""
+"""Curation surface: text cleaning and language ID (functions/text.py)
+and training-mix budget allocation (operators/budget.py)."""
 
 from __future__ import annotations
 
+import os
+import pathlib
+import re
+
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +18,7 @@ from github_data_pipeline_spark.operators.budget import (
     budget_sample,
 )
 from github_data_pipeline_spark.sources.tables import load_table
+from github_data_pipeline_spark.testing import register_duckdb_views
 
 
 def _one(spark, col):
@@ -111,3 +117,110 @@ def test_budget_sample_deterministic_and_proportional(spark, sf_dir):
 def test_budget_sample_unknown_source_dropped(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     assert budget_sample(docs, {"no-such-source": 1.0}).count() == 0
+
+
+# --- language ID: the argmax, its DuckDB twin and the old fold ----------
+
+
+def _fold_lang_id(tok):
+    """The CASE-cascade fold ``lang_id`` was before the argmax: keep the
+    strictly greater score over the languages in sorted order. Kept
+    here as the reference for the argmax's tie-break."""
+    scores = T.lang_scores(tok)
+    ordered = sorted(scores)
+    best_lang, best_score = F.lit(ordered[0]), scores[ordered[0]]
+    for lang in ordered[1:]:
+        better = scores[lang] > best_score
+        best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
+        best_score = F.when(better, scores[lang]).otherwise(best_score)
+    return best_lang
+
+
+LANG_CASES = [
+    ([], "de"),  # empty list: every score 0
+    (["hello", "world"], "de"),  # all-zero scores
+    (["the", "el"], "en"),  # en/es tie
+    (["el", "le"], "es"),  # es/fr tie
+    (["de5", "shi4", "the"], "zh"),  # unique zh maximum
+    (["The", "DIE"], "de"),  # mixed case: en/de tie after lower()
+]
+
+
+def test_lang_id_matches_twin_and_fold_on_edge_lists(spark):
+    df = spark.createDataFrame(
+        [(i, toks) for i, (toks, _) in enumerate(LANG_CASES)],
+        "i int, toks array<string>",
+    )
+    rows = df.orderBy("i").select(
+        T.lang_id(F.col("toks")).alias("argmax"),
+        _fold_lang_id(F.col("toks")).alias("fold"),
+    ).collect()
+    con = duckdb.connect()
+    try:
+        duck = [
+            con.execute(
+                f"SELECT {T.lang_id_sql('toks')} FROM "
+                "(SELECT ?::VARCHAR[] AS toks)",
+                [toks],
+            ).fetchone()[0]
+            for toks, _ in LANG_CASES
+        ]
+    finally:
+        con.close()
+    want = [lang for _, lang in LANG_CASES]
+    assert [r["argmax"] for r in rows] == want
+    assert [r["fold"] for r in rows] == want
+    assert duck == want
+
+
+def test_lang_id_matches_twin_and_fold_on_documents(spark, sf_dir):
+    # the sf0.01 documents beside the fixture's scale factor, when present
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    sf = sf if os.path.isdir(sf) else sf_dir
+    toks = T.tokens("text")
+    spark_rows = {
+        r["doc_id"]: (r["argmax"], r["fold"])
+        for r in load_table(spark, sf, "documents")
+        .select(
+            "doc_id",
+            T.lang_id(toks).alias("argmax"),
+            _fold_lang_id(toks).alias("fold"),
+        )
+        .collect()
+    }
+    con = duckdb.connect()
+    try:
+        register_duckdb_views(con, sf)
+        duck = dict(
+            con.execute(
+                f"SELECT doc_id, {T.lang_id_sql('toks')} FROM "
+                f"(SELECT doc_id, {T.tokens_sql()} AS toks FROM documents)"
+            ).fetchall()
+        )
+    finally:
+        con.close()
+    assert spark_rows and set(spark_rows) == set(duck)
+    assert {d: a for d, (a, _) in spark_rows.items()} == duck
+    assert all(a == f for a, f in spark_rows.values())
+    # non-vacuous: more than one language is predicted
+    assert len(set(duck.values())) > 1
+
+
+# the marker/stopword-hit count over a token list, in any string form;
+# functions/fulltext.analyze_sql removes stopwords (no lower()) and is
+# a different operation
+_HIT_SQL = re.compile(r'list_contains\((?:"\s*f?")?\s*\[[^\]]*\],\s*lower\(')
+
+
+def test_stopword_hit_sql_only_in_text_module():
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "github_data_pipeline_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        text = path.read_text()
+        offenders += [
+            f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+            for m in _HIT_SQL.finditer(text)
+            if rel != "functions/text.py"
+        ]
+    assert offenders == []

@@ -3,13 +3,16 @@ monotonicity, and the dedup keeper rule."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from github_data_pipeline_spark.curation import (
-    curate,
-    funnel_report,
+    clean_stage,
+    funnel,
+    gate,
+    language_pred,
     neardup_drop_stage,
+    quality_pred,
+    repetition_pred,
 )
+from github_data_pipeline_spark.functions import text as T
 from github_data_pipeline_spark.sources.tables import load_table, spread
 
 
@@ -17,10 +20,37 @@ def _docs(spark, sf_dir):
     return spread(load_table(spark, sf_dir, "documents"))
 
 
+def _lazy_stages(docs):
+    """The funnel as a plain chain of lazy filters over ``docs``, each
+    gate re-tokenizing the text — the reference :func:`funnel` must
+    agree with."""
+    toks = T.tokens("text")
+    cleaned = clean_stage(docs)
+    language = cleaned.filter(language_pred(toks))
+    quality = language.filter(quality_pred(toks))
+    repetition = quality.filter(repetition_pred(toks))
+    return [
+        ("raw", docs),
+        ("cleaned_nonempty", cleaned),
+        ("language", language),
+        ("quality", quality),
+        ("repetition", repetition),
+        ("neardup_dropped", neardup_drop_stage(repetition)),
+    ]
+
+
+def _report(counts):
+    return [(r["stage"], r["survivors"]) for r in counts.collect()]
+
+
+def _by_id(df):
+    return sorted(df.collect(), key=lambda r: r["doc_id"])
+
+
 def test_funnel_monotone_and_nonempty(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    final, stages = curate(docs, sample_rates=None)
-    report = funnel_report(stages)
+    _kept, counts = funnel(docs)
+    report = _report(counts)
     names = [n for n, _ in report]
     assert names == [
         "raw", "cleaned_nonempty", "language", "quality", "repetition",
@@ -55,30 +85,31 @@ def test_neardup_drop_keeps_lowest_id(spark, sf_dir):
         )
 
 
-def test_funnel_with_budget_sample(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    sources = [r["source"] for r in docs.select("source").distinct().collect()]
-    final, stages = curate(docs, sample_rates={s: 0.5 for s in sources})
-    assert stages[-1][0] == "budget_sample"
-    assert 0 < final.count() <= stages[-2][1].count()
-
-
 def test_survivor_counts_match_stage_by_stage(spark, sf_dir):
-    """The one-scan funnel report (funnel_survivor_counts — what the
-    registry's curation_funnel_report ships) must equal counting each
-    curate() stage directly: the two paths share the gate predicate
-    functions, and this pins that the checkpoint/semi-join replumbing
-    changed cost, not semantics."""
-    from github_data_pipeline_spark.curation import funnel_survivor_counts
-
+    """The one-scan funnel's counts (what the data build and the
+    registry's curation_funnel_report ship) must equal counting each
+    prefix of the lazy filter chain directly: the two share the gate
+    predicate functions, and this pins that the checkpoint/semi-join
+    replumbing changed cost, not semantics."""
     docs = _docs(spark, sf_dir)
-    _final, stages = curate(docs, sample_rates=None)
-    want = [(n, df.count()) for n, df in stages]
-    got = [
-        (r["stage"], r["survivors"])
-        for r in funnel_survivor_counts(docs).collect()
-    ]
-    assert got == want
+    want = [(n, df.count()) for n, df in _lazy_stages(docs)]
+    assert _report(funnel(docs)[1]) == want
+
+
+def test_gate_survivors_keep_every_column(spark, sf_dir):
+    """``gate``'s survivors are the lazy chain's repetition survivors,
+    row for row and with every input column (text cleaned), plus their
+    token array; ``funnel``'s kept rows are the chain's near-dup
+    survivors."""
+    docs = _docs(spark, sf_dir)
+    stages = dict(_lazy_stages(docs))
+    _flags, survivors = gate(docs)
+    assert survivors.columns == docs.columns + ["toks"]
+    rows = survivors.collect()
+    assert rows and all(list(r["toks"]) == r["text"].split(" ") for r in rows)
+    assert _by_id(survivors.drop("toks")) == _by_id(stages["repetition"])
+    kept, _counts = funnel(docs)
+    assert _by_id(kept.drop("toks")) == _by_id(stages["neardup_dropped"])
 
 
 def test_funnel_report_plan_has_no_full_refunnel(spark, sf_dir):
@@ -86,10 +117,8 @@ def test_funnel_report_plan_has_no_full_refunnel(spark, sf_dir):
     its physical plan may scan `documents` for the raw count and the
     survivor semi-join, but must NOT contain the cleaning regexes more
     than twice (the naive per-stage report carries them 5x)."""
-    from github_data_pipeline_spark.curation import funnel_survivor_counts
-
     docs = _docs(spark, sf_dir)
-    plan = funnel_survivor_counts(docs)._jdf.queryExecution().explainString(
+    plan = funnel(docs)[1]._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "extended"
         )
@@ -104,17 +133,15 @@ def test_survivor_boundary_stores_are_equivalent(spark, sf_dir, tmp_path):
     100-TB boundary that survives executor loss)."""
     import pytest
 
-    from github_data_pipeline_spark.curation import funnel_survivor_counts
-
     docs = _docs(spark, sf_dir)
-    base = funnel_survivor_counts(docs).collect()
-    disk = funnel_survivor_counts(docs, survivor_store="disk").collect()
-    table = funnel_survivor_counts(
+    base = funnel(docs)[1].collect()
+    disk = funnel(docs, survivor_store="disk")[1].collect()
+    table = funnel(
         docs, survivor_store="table", scratch_dir=str(tmp_path)
-    ).collect()
+    )[1].collect()
     assert [r.asDict() for r in base] == [r.asDict() for r in disk]
     assert [r.asDict() for r in base] == [r.asDict() for r in table]
     with pytest.raises(ValueError, match="scratch_dir"):
-        funnel_survivor_counts(docs, survivor_store="table")
+        funnel(docs, survivor_store="table")
     with pytest.raises(ValueError, match="unknown boundary store"):
-        funnel_survivor_counts(docs, survivor_store="ram")
+        funnel(docs, survivor_store="ram")

@@ -1,16 +1,17 @@
 """The curation gates are stateless map-side filters, so the SAME code
 runs under Structured Streaming: stream the documents table, apply
-clean/language/quality, and the drained result must equal the batch
-stages exactly."""
+clean/language/quality/repetition, and the drained result must equal
+the batch gates exactly."""
 
 from __future__ import annotations
 
 from github_data_pipeline_spark.curation import (
     clean_stage,
-    language_stage,
-    quality_stage,
-    repetition_stage,
+    language_pred,
+    quality_pred,
+    repetition_pred,
 )
+from github_data_pipeline_spark.functions import text as T
 from github_data_pipeline_spark.sources.tables import load_table
 from github_data_pipeline_spark.streaming.jobs import run_available_now
 
@@ -23,10 +24,13 @@ def test_streamed_gates_equal_batch(spark, sf_dir):
     )
 
     def gates(df):
-        return repetition_stage(
-            quality_stage(language_stage(clean_stage(df)))
-        ).select(
-            "doc_id"
+        toks = T.tokens("text")
+        return (
+            clean_stage(df)
+            .filter(
+                language_pred(toks) & quality_pred(toks) & repetition_pred(toks)
+            )
+            .select("doc_id")
         )
 
     got = {
