@@ -188,13 +188,18 @@ def gate(
 
     ``survivors`` keeps every column of ``docs`` with ``text``
     cleaned, plus its token array ``toks``."""
-    cleaned = clean_stage(docs)
-    toks = T.tokens("text")
-    flags = cleaned.select(
-        "doc_id",
-        language_pred(toks, lang).alias("lang_ok"),
-        quality_pred(toks).alias("qual_ok"),
-    ).localCheckpoint()
+    # tokens in their own projection: a multiply-referenced non-cheap
+    # alias is not inlined, so the tokenizer runs once per document
+    flags = (
+        clean_stage(docs)
+        .select("doc_id", T.tokens("text").alias("toks"))
+        .select(
+            "doc_id",
+            language_pred(F.col("toks"), lang).alias("lang_ok"),
+            quality_pred(F.col("toks")).alias("qual_ok"),
+        )
+        .localCheckpoint()
+    )
     surv_ids = flags.filter(F.col("lang_ok") & F.col("qual_ok")).select(
         "doc_id"
     )

@@ -91,7 +91,3 @@ def memoize_when_keyable(fn):
         return fn(*args, **kwargs)
 
     return wrapper
-
-
-def cache_info() -> tuple[int, ...]:  # pragma: no cover - debug aid
-    return (len(_CACHE),)

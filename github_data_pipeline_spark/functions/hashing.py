@@ -46,63 +46,12 @@ def md5_h32_sql(x: str) -> str:
 # --- per-table key expressions (schema.py:303-366) ---------------------
 
 
-def key_repo_meta(repo_name: Column | str) -> Column:
-    return _c(repo_name)
-
-
 def key_issue(repo_name: Column | str, number: Column | str) -> Column:
     return F.concat_ws("#", _c(repo_name), F.lit("issue"), _c(number))
 
 
-def key_pull_request(repo_name: Column | str, number: Column | str) -> Column:
-    return F.concat_ws("#", _c(repo_name), F.lit("pr"), _c(number))
-
-
-def key_commit(sha: Column | str) -> Column:
-    return _c(sha)
-
-
 def key_contributor(repo_name: Column | str, login: Column | str) -> Column:
     return F.concat_ws("#", _c(repo_name), F.lit("contrib"), _c(login))
-
-
-def key_pr_links(repo_name: Column | str, pr_number: Column | str) -> Column:
-    return F.concat_ws("#", _c(repo_name), F.lit("prlinks"), _c(pr_number))
-
-
-def key_issue_closed_by(
-    repo_name: Column | str, issue_number: Column | str, sha: Column | str
-) -> Column:
-    return F.concat_ws(
-        "#", _c(repo_name), F.lit("closedby"), _c(issue_number), _c(sha)
-    )
-
-
-def key_cross_repo_link(
-    source_repo: Column | str,
-    source_type: Column | str,
-    source_number: Column | str,
-    target_repo: Column | str,
-    target_number: Column | str,
-) -> Column:
-    """sha1 of the canonical source->target key string (schema.py:334-341)."""
-    return F.sha1(
-        F.concat_ws(
-            "->",
-            F.concat_ws("#", _c(source_repo), _c(source_type), _c(source_number)),
-            F.concat_ws("#", _c(target_repo), _c(target_number)),
-        )
-    )
-
-
-def key_blame_file(
-    repo_name: Column | str, ref: Column | str, path: Column | str
-) -> Column:
-    """``repo#blame#{ref}#file#sha1(repo:ref:path)`` (schema.py:344-358)."""
-    file_hash = F.sha1(F.concat_ws(":", _c(repo_name), _c(ref), _c(path)))
-    return F.concat_ws(
-        "#", _c(repo_name), F.lit("blame"), _c(ref), F.lit("file"), file_hash
-    )
 
 
 # --- canonical-JSON content hash (schema.py:25-29) ----------------------

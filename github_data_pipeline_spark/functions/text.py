@@ -84,7 +84,9 @@ def lang_id(tok: Column) -> Column:
 
     One ``array_max`` over ``struct(score, -rank, lang)`` with the
     languages in sorted order: a higher score wins, and among equal
-    scores the lower rank — the lexicographically first language."""
+    scores the lower rank — the lexicographically first language.
+    Pass a column reference, not an expression: each language's score
+    re-evaluates ``tok``."""
     scores = lang_scores(tok)
     cands = [
         F.struct(

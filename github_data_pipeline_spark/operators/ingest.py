@@ -7,8 +7,9 @@ re-expressed as column transforms:
   with a non-null ``pull_request`` are dropped (collectors.py:590);
 * commit detail enrichment — ``files_changed`` = non-null filenames,
   ``files_changed_count`` = its size (collectors.py:137-138, 505-518);
-* ``repo_name`` stamping / fallback — full_name else owner/repo
-  (collectors.py:562-568, indexer.py:32-36);
+* repo-meta ``repo_name`` fallback — full_name else owner/name
+  (collectors.py:562-568); every other row is stamped at fetch time
+  (sources/github_client.py);
 * contributors recomputation — the reference trusts GitHub's
   pre-aggregated endpoint (collectors.py:666-669); we can also derive
   it from commits with one grouped count (SURVEY §2.4).
@@ -25,11 +26,6 @@ def split_issues_feed(raw_issues: DataFrame) -> DataFrame:
     return raw_issues.filter(F.col("pull_request").isNull())
 
 
-def prs_in_issues_feed(raw_issues: DataFrame) -> DataFrame:
-    """The complementary rows (kept for parity checks)."""
-    return raw_issues.filter(F.col("pull_request").isNotNull())
-
-
 def enrich_commit_files(commits: DataFrame) -> DataFrame:
     """Derive files_changed / files_changed_count from the files array."""
     names = F.filter(
@@ -39,17 +35,6 @@ def enrich_commit_files(commits: DataFrame) -> DataFrame:
     return commits.withColumn(
         "files_changed", F.coalesce(names, F.array().cast("array<string>"))
     ).withColumn("files_changed_count", F.size(F.col("files_changed")))
-
-
-def ensure_repo_name(df: DataFrame, owner: str, repo: str) -> DataFrame:
-    """repo_name := repo_name else full_name else owner/repo."""
-    fallback = F.lit(f"{owner}/{repo}")
-    cols = set(df.columns)
-    candidates = [F.col("repo_name")] if "repo_name" in cols else []
-    if "full_name" in cols:
-        candidates.append(F.col("full_name"))
-    candidates.append(fallback)
-    return df.withColumn("repo_name", F.coalesce(*candidates))
 
 
 def normalize_repo_meta(raw_meta: DataFrame) -> DataFrame:

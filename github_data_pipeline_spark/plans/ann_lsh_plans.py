@@ -16,8 +16,7 @@ The signed dot folds in array order on both engines (the
 functions/vectors.py convention), so even the bucket-boundary sign
 tests are bit-identical.
 
-Registered past the driver's 50-entry verdict window (plans/core.py
-policy); the local cell-exact checker and bench cover it.
+The local cell-exact checker and bench cover it.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""Registry entry (registered LAST so the driver window is stable):
-corpus encoding with the learned BPE tokenizer, entirely in Catalyst.
+"""Registry entry: corpus encoding with the learned BPE tokenizer,
+entirely in Catalyst.
 Helpers and the trainer-CTE chain live in :mod:`.bpe_plans`; see
 ``bpe_encoded_profile``'s doc for the in-order-replace encoding
 identity and its equivalence to rank-greedy encoding."""

@@ -1,8 +1,7 @@
 """Registry entry for context-window chunking (operators/chunking.py).
 
-Registered past the driver's 50-entry verdict window on purpose (see
-plans/core.py); the local cell-exact checker and tests/test_chunking.py
-pin it, and bench.py times it with the rest of the oracle set.
+The local cell-exact checker and tests/test_chunking.py pin it, and
+bench.py times it with the rest of the oracle set.
 """
 
 from __future__ import annotations

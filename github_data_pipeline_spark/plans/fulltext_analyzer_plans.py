@@ -1,4 +1,4 @@
-"""Tail registry entries: analyzer-fidelity variants of BM25 search.
+"""Registry entries: analyzer-fidelity variants of BM25 search.
 
 The reference's ES schema declares ``text_en`` as a *standard*
 analyzer with English stopwords (reference
@@ -21,12 +21,6 @@ Both share the one-pass BM25 plan of ``doc_fulltext_search`` (map-side
 tf arrays, 1-row broadcast stats, TakeOrderedAndProject top-k) and the
 same cross-engine hash discipline (mirrored association order,
 ROUND(,4), doc_id tie-break).
-
-Window placement: registered late in ``plans.core.all_plans`` import
-order, then pulled INSIDE the driver's 50-entry verdict window by the
-second round-4 swap (see the demote block in ``plans/core.py``) so the
-driver scores both entries this round; the local cell-exact checker
-covers them too.
 """
 
 from __future__ import annotations

@@ -14,8 +14,7 @@ Regex parity: the three patterns (functions/text.py) use only char
 classes, bounded quantifiers, non-capturing groups and ``\\b`` — the
 common subset of Java regex (Spark) and RE2 (DuckDB).
 
-Registered past the driver's 50-entry verdict window (plans/core.py
-policy); the local cell-exact checker and bench cover it.
+The local cell-exact checker and bench cover it.
 """
 
 from __future__ import annotations

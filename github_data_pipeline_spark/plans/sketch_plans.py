@@ -28,9 +28,8 @@ risk at all.
   size with a fixed-size bottom-k-by-hash instead (same md5 machinery
   as KMV) — the rate form keeps the oracle a pure SQL expression.
 
-Registered past the driver's 50-entry verdict window (plans/core.py
-policy); the local cell-exact checker (CORRECTNESS_TAIL.json) and the
-bench cover it.
+The local cell-exact checker (CORRECTNESS_TAIL.json) and the bench
+cover it.
 """
 
 from __future__ import annotations

@@ -1,6 +1,4 @@
-"""Registry entry (in the driver verdict window via the second
-round-4 swap in ``plans/core.py``): leakage-safe train/val/test
-splits.
+"""Registry entry: leakage-safe train/val/test splits.
 
 The training-data failure this guards against: hashing each document
 independently into train/val/test puts near-duplicates on both sides

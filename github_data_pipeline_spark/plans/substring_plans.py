@@ -1,9 +1,5 @@
 """Registry entry for cross-document substring dedup.
 
-Sits inside the driver's 50-entry verdict window: ``all_plans()``
-demotes the redundantly-covered ``customer_order_left_join`` to the
-tail instead, so this uniquely-covering query gets a driver row.
-
 Oracle parity note: the Spark side groups windows by ``xxhash64`` of
 the gram purely as a shuffle-width optimization; the oracle groups by
 the raw gram string. The outputs are identical unless xxhash64

@@ -105,9 +105,9 @@ _MARKER_SCORE_COLS = ",\n      ".join(
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))
-    toks = T.tokens("text")
     return (
-        d.select("doc_id", "lang", T.lang_id(toks).alias("predicted"))
+        d.select("doc_id", "lang", T.tokens("text").alias("toks"))
+        .select("doc_id", "lang", T.lang_id(F.col("toks")).alias("predicted"))
         .groupBy("lang", "predicted")
         .agg(F.count(F.lit(1)).alias("docs"))
     )

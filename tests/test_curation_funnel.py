@@ -3,6 +3,8 @@ monotonicity, and the dedup keeper rule."""
 
 from __future__ import annotations
 
+import pytest
+
 from github_data_pipeline_spark.curation import (
     clean_stage,
     funnel,
@@ -131,8 +133,6 @@ def test_survivor_boundary_stores_are_equivalent(spark, sf_dir, tmp_path):
     funnel report under all three storage options — localCheckpoint
     (bench SFs), DISK_ONLY persist, and a parquet scratch table (the
     100-TB boundary that survives executor loss)."""
-    import pytest
-
     docs = _docs(spark, sf_dir)
     base = funnel(docs)[1].collect()
     disk = funnel(docs, survivor_store="disk")[1].collect()
@@ -145,3 +145,23 @@ def test_survivor_boundary_stores_are_equivalent(spark, sf_dir, tmp_path):
         funnel(docs, survivor_store="table")
     with pytest.raises(ValueError, match="unknown boundary store"):
         funnel(docs, survivor_store="ram")
+
+
+def test_gate_flags_tokenize_once(spark, sf_dir, monkeypatch):
+    """The flags scan runs the tokenizer once per document, not once
+    per language score plus once for the quality gate."""
+
+    class Captured(Exception):
+        pass
+
+    def capture(self, *args, **kwargs):
+        raise Captured(self)
+
+    docs = _docs(spark, sf_dir)
+    # the first checkpoint in gate is the flags frame's
+    monkeypatch.setattr(type(docs), "localCheckpoint", capture)
+    with pytest.raises(Captured) as c:
+        gate(docs)
+    flags = c.value.args[0]
+    plan = flags._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(trim(") == 1, plan

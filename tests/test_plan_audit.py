@@ -28,7 +28,7 @@ def test_audit_detects_each_hazard_class():
     assert any("CartesianProduct" in h for h in cart.hazards)
     bnlj = audit_plan("q", "BroadcastNestedLoopJoin BuildRight\n")
     assert any("BroadcastNestedLoopJoin" in h for h in bnlj.hazards)
-    # allowlisted BNLJ demotes to a note
+    # an allowlisted BNLJ is reported as a note, not a hazard
     ok = audit_plan("orders_profile", "BroadcastNestedLoopJoin BuildRight\n")
     assert not ok.hazards and ok.notes
     py = audit_plan("q", "BatchEvalPython [f(x)]\n")

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from github_data_pipeline_spark.plans import all_plans
+from github_data_pipeline_spark.plans.core import DRIVER_WINDOW, ORDER, Registry
 from github_data_pipeline_spark.testing import diff_frames, run_oracle
 
 REGISTRY = all_plans()
@@ -34,143 +35,39 @@ def test_entry_contract(spark):
 
 
 def test_driver_window_invariants():
-    """The rotation policy is load-bearing: the driver verdicts exactly
-    the first 50 registry entries, so (a) every windowed entry must be
-    oracle-backed (a rows-only entry would waste a verdict slot), and
-    (b) the queries added THIS round must sit inside the window so
-    they earn driver rows immediately."""
-    from github_data_pipeline_spark.plans import all_plans
-
-    reg = all_plans()
-    names = list(reg.queries())
-    assert len(names) >= 50
-    window = names[:50]
-    rows_only = [n for n in window if reg[n].oracle is None]
-    assert rows_only == []
+    """The driver verdicts exactly the first DRIVER_WINDOW registry
+    entries, so every windowed entry must be oracle-backed (a rows-only
+    entry would waste a verdict slot) and the pinned entries must stay
+    inside the window."""
+    names = list(REGISTRY.queries())
+    window = names[:DRIVER_WINDOW]
+    assert len(window) == DRIVER_WINDOW
+    assert [n for n in window if REGISTRY[n].oracle is None] == []
     for q in (
-        # long-standing anchors that must stay scored (r9 swap: the
-        # former anchors events_range_attribution /
-        # scd2_order_priority_history / mixture_alpha_sampling /
-        # doc_quality_linear_gate / lm_bigram_counts rotated out with
-        # strictly-stronger in-window successors — see the round-9
-        # blocks in plans/core.py)
         "neardup_cluster_keepers",
         "incremental_split_update",
         "events_item_pagerank",
         "bpe_learned_merges",
-        # (round-7 rotation survivor doc_hybrid_retrieval rotated out
-        # in r12 for dpp_partition_prune_report after five consecutive
-        # greens — every component class keeps an in-window scorer;
-        # see the round-12 block in plans/core.py)
-        # round-8 rotation: the twelve entries that had never held a
-        # driver-scored row — the eleven r7 tail additions plus the
-        # newly oracle-backed approx_lineitem_stats (demoted to make
-        # room: substring_dup_spans, doc_chunk_windows, ann_lsh_topk,
-        # events_trailing_hour_window, doc_length_percentiles,
-        # events_value_outliers, decontam_overlap,
-        # budget_sample_counts, doc_fulltext_porter,
-        # leakage_safe_splits, kmv_sketch_stats, doc_repetition_gates
-        # — all r07-green, classes covered in-window; see
-        # plans/core.py round-8 swap comment)
-        # (lm_kn_bigram_probs / ann_pq_adc_topk / doc_winnow_fingerprints
-        # / source_shingle_overlap rotated out in r10 with
-        # strictly-stronger or consuming in-window successors — see the
-        # round-10 block in plans/core.py)
-        # (r11 rotation: lm_doc_typicality, winnow_shared_fp_pairs,
-        # events_retention_cohorts, salted_priority_revenue and
-        # approx_lineitem_stats rotated out with in-window class
-        # coverage — see the round-11 blocks in plans/core.py)
         "lm_kn_trigram_probs",
         "ann_ivfpq_topk",
-        # (ann_pq_recall rotated out in r12 for stream_cms_equality —
-        # the composed PQ+IVF plan stays in-window; the recall-gate
-        # class stays cell-exact twice in the tail)
-        # (doc_hybrid_overlap_slice held a window slot in r8, earned
-        # its green row, and rotated out in r9 for
-        # zorder_clustering_stats — its overlap proof stays pinned by
-        # tests/test_hybrid.py)
-        # round-8 second swap: the nine entries added this round take
-        # window slots immediately so round 9 starts with ZERO
-        # rotation backlog (nine r03-r05-green entries demoted with
-        # in-window class coverage; see plans/core.py)
-        # (r11: hard_negative_mining, lm_bigram_lift,
-        # doc_dup_ngram_rate, dq_referential_audit and
-        # rollup_incremental_merge rotated out — plans/core.py r11)
-        # (stratified_sample_exact rotated out in r12 for the
-        # weak-label vote report after four greens — md5-selection
-        # stays cell-exact three ways in the tail, rank-window quotas
-        # scored by salted_group_topk; see plans/core.py)
         "stream_sliding_rollup",
         "stream_sessionization",
         "stream_watermark_dedup",
-        # round-9 rotation: the late-r8 CUBE entry that registered one
-        # slot past the window (top_orders_per_customer demoted with
-        # in-window rank-window class coverage; see plans/core.py)
         "doc_source_lang_cube",
-        # round-9 additions: all eight in-window immediately (second
-        # r9 swap in plans/core.py — eight r03-r07 greens demoted;
-        # embedding_covariance rotated out in r10, superseded by the
-        # cell-equal pair formulation below)
-        # (r12 session 2: kmv_incremental_merge rotated out — the
-        # mergeable-sketch IVM contract is scored in-window by
-        # stream_cms_equality; see plans/core.py)
         "curation_funnel_report",
         "stream_interval_join",
         "cdc_apply_changes",
         "salted_group_topk",
-        # (r11: classifier_pr_curve and zorder_clustering_stats
-        # rotated out — the ROC-AUC integral and the bucketed-join
-        # layout win keep their classes scored in-window)
         "json_roundtrip_events",
         "stream_restart_recovery",
-        # round-10 additions: all five in-window immediately (round-10
-        # swap in plans/core.py — five r8/r9 greens demoted, each with
-        # a strictly-stronger or consuming in-window successor)
-        # (r12 session 2: embedding_covariance_pairs rotated out — the
-        # in-window PCA pair consumes the same centered-covariance
-        # machinery every iteration)
         "pca_power_iteration",
         "stream_restart_keyed_ledger",
         "bucketed_priority_revenue",
         "token_heavy_hitters",
-        # round-10 session-2 additions: all five in-window immediately
-        # (second round-10 swap in plans/core.py — five r1-r9 greens
-        # demoted: minhash_lsh_candidates, gh_issue_stats,
-        # top_customers_by_revenue, stream_user_ledger, ann_recall,
-        # each with a strictly-stronger or consuming in-window
-        # successor)
         "jaccard_prefix_filter_pairs",
-        # (r12 session 2: classifier_roc_auc and events_triangle_census
-        # rotated out — isotonic calibration consumes the same score
-        # column in-window; pagerank + capped-LSH closure keep the
-        # graph family scored)
-        
-        # (events_bfs_reach rotated out in r12 for the isotonic
-        # calibration entry — the iterative-closure class is scored
-        # in-window by lsh_capped_star_components' pointer jumping)
         "lang_token_byte_regression",
-        # (second wave: doc_pii_scrub and gh_issues_closed_by_commits
-        # demoted — PII masking runs in-window inside the funnel's
-        # cleaning stage; the scenario family keeps three in-window
-        # twins and the property suite)
-        # (r12 session 2: doc_length_quantiles_histogram rotated out —
-        # the exact-rational PERCENTILE_CONT entry stays in-window)
         "stream_static_enrichment",
-        # (r11: doc_gates_unpivot_long rotated out — the Expand
-        # reshape stays scored by doc_source_lang_cube)
-        # round-11 rotation: the r10 third-wave trio earns its first
-        # driver rows, and every r11 addition lands in-window
-        # immediately (thirteen demotions with per-entry rationale in
-        # plans/core.py round-11 blocks)
-        # (r12 session 2: the r10 third-wave trio — events_hourly_ohlc,
-        # events_robust_outliers, events_user_skew_report — rotated out
-        # after two driver-green rounds each; arg-extreme scored by
-        # top_supplier_q15, exact quantiles by percentile_cont, skew by
-        # salted_group_topk; see plans/core.py)
         "seq_packing_manifest",
-        # (r12: lsh_incremental_index rotated out — its batch-only
-        # banding + index equi-join machinery is re-executed in-window
-        # by the strictly harder capped entry below)
         "cms_token_frequency",
         "snm_neardup_pairs",
         "stream_interval_join_outer",
@@ -179,28 +76,11 @@ def test_driver_window_invariants():
         "local_supplier_revenue_q5",
         "bloom_prejoin_report",
         "part_bag_set_ops",
-        # round-12 additions: in-window immediately (r12 swaps in
-        # plans/core.py — lsh_incremental_index demoted for the
-        # strictly harder capped-components entry;
-        # doc_hybrid_retrieval demoted for the DPP telemetry entry
-        # with every component class still scored in-window)
         "lsh_capped_star_components",
         "dpp_partition_prune_report",
-        # ...and the tenth drained gate class (ann_pq_recall demoted —
-        # ann_ivfpq_topk keeps the composed PQ+IVF plan in-window; the
-        # recall-gate class stays cell-exact twice in the tail)
         "stream_cms_equality",
-        # ...and isotonic PAV calibration via the closed minimax form
-        # (events_bfs_reach demoted — iterative closure scored by the
-        # capped-LSH components entry)
         "classifier_isotonic_calibration",
-        # ...and the weak-supervision vote-matrix report
-        # (stratified_sample_exact demoted with three tail twins)
         "weak_label_vote_report",
-        # round-12 session-2 additions: all eight in-window immediately
-        # (session-2 swap in plans/core.py — eight multi-round greens
-        # demoted, each with its class still scored in-window): the
-        # TPC-H completion set...
         "volume_shipping_q7",
         "market_share_q8",
         "promo_revenue_q14",
@@ -208,17 +88,33 @@ def test_driver_window_invariants():
         "small_qty_revenue_q17",
         "large_volume_customer_q18",
         "late_only_supplier_q21",
-        # ...and Bradley-Terry preference aggregation
         "bt_preference_strengths",
-        # ...and Q19's cross-table disjunctive brackets with explicit
-        # per-scan weakenings (gh_pr_issue_state_join rotated out after
-        # seven greens — three linker twins stay in-window)
         "discounted_revenue_q19",
     ):
         assert q in window, f"{q} fell out of the driver window"
-    # every demoted entry must carry an oracle (approx_lineitem_stats
-    # graduated in r7: its sketch guarantees are now oracle-pinned
-    # verdict flags, so NO registry entry is rows-only anymore)
-    by_design: set[str] = set()
-    for n in names[50:]:
-        assert reg[n].oracle is not None or n in by_design
+    # no registry entry is rows-only, in the tail either
+    for n in names[DRIVER_WINDOW:]:
+        assert REGISTRY[n].oracle is not None, n
+
+
+def test_registry_follows_order_manifest():
+    assert list(REGISTRY.queries()) == list(ORDER)
+
+
+def _builder(spark, sf_dir):
+    raise AssertionError("never built")
+
+
+def test_reorder_rejects_unlisted_entry():
+    reg = Registry()
+    reg.add("listed", None)(_builder)
+    reg.add("stray_entry", None)(_builder)
+    with pytest.raises(ValueError, match="stray_entry"):
+        reg.reorder(("listed",))
+
+
+def test_reorder_rejects_unregistered_name():
+    reg = Registry()
+    reg.add("listed", None)(_builder)
+    with pytest.raises(ValueError, match="ghost_entry"):
+        reg.reorder(("listed", "ghost_entry"))

@@ -14,11 +14,11 @@ get_spark — the driver builds its own untuned session, so this mode
 catches any query that silently depends on a session-level conf that
 load_table doesn't itself apply (run it once before round end).
 
-``--tail`` restricts the run to registry entries PAST the driver's
-50-entry verdict window (the demoted queries); ``--json`` additionally
-writes a driver-shaped artifact (rows/schema/hash per query — "hash"
-here means the stricter cell-exact comparison) so the coverage claim
-for past-window entries is backed by a committed result.
+``--tail`` restricts the run to the registry entries past the driver's
+verdict window (``ORDER[DRIVER_WINDOW:]`` in plans/core.py); ``--json``
+additionally writes a driver-shaped artifact (rows/schema/hash per
+query — "hash" here means the stricter cell-exact comparison) so the
+coverage claim for past-window entries is backed by a committed result.
 """
 
 from __future__ import annotations
@@ -30,13 +30,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-DRIVER_WINDOW = 50
-
 
 def main() -> int:
     import duckdb
 
     import __spark_entry__ as entry_mod
+    from github_data_pipeline_spark.plans.core import DRIVER_WINDOW
     from github_data_pipeline_spark.session import get_spark
     from github_data_pipeline_spark.testing import (
         diff_frames,
