@@ -26,10 +26,14 @@ checked.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.bpe import PRETOKEN_PATTERN, learn_bpe
 from ..sources.tables import load_table, rows_to_dataframe, spread
+from .artifacts import build_once
 from .core import REGISTRY
 
 N_MERGES = 24
@@ -119,41 +123,30 @@ def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def learned_merges_artifact(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[str, str, int]]:
-    """The learned merge table, persisted per sf_dir (tiny JSON under
-    ``.cache/bpe_merges/``) — a trained tokenizer is THE canonical
-    persisted artifact of a data pipeline; consumers (the encoder
-    query, ``operators/bpe.encode_words``) read it instead of
-    retraining.  Keyed by plans/artifacts.artifact_cache_path with the
-    training constants (merge count, min freq, pretokenizer pattern)
-    folded in, so editing any of them invalidates the cache."""
-    import json
-    import os
+    """The learned merge table, persisted per sf_dir (a tiny
+    ``merges.json`` under ``.cache/bpe_merges/``) — a trained tokenizer
+    is THE canonical persisted artifact of a data pipeline; consumers
+    (the encoder query, ``operators/bpe.encode_words``) read it instead
+    of retraining.  Keyed on the training constants (merge count, min
+    freq, pretokenizer pattern), so editing any of them invalidates
+    the cache."""
 
-    from ..operators.bpe import PRETOKEN_PATTERN
-    from .artifacts import artifact_cache_path
-
-    path = (
-        artifact_cache_path(
-            sf_dir,
-            "bpe_merges",
-            f"{N_MERGES}:{MIN_FREQ}:{PRETOKEN_PATTERN}",
-        )
-        + ".json"
-    )
-    if os.path.exists(path):
-        with open(path) as f:
-            return [tuple(m) for m in json.load(f)]
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    merges = learn_bpe(docs, n_merges=N_MERGES, min_freq=MIN_FREQ)
-    try:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
+    def write(tmp: str) -> None:
+        docs = spread(load_table(spark, sf_dir, "documents"))
+        merges = learn_bpe(docs, n_merges=N_MERGES, min_freq=MIN_FREQ)
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "merges.json"), "w") as f:
             json.dump(merges, f)
-        os.replace(tmp, path)
-    except OSError:
-        pass
-    return merges
+
+    path = build_once(
+        sf_dir,
+        "bpe_merges",
+        ("documents",),
+        f"{N_MERGES}:{MIN_FREQ}:{PRETOKEN_PATTERN}",
+        write,
+    )
+    with open(os.path.join(path, "merges.json")) as f:
+        return [tuple(m) for m in json.load(f)]
 
 
 def _encode_ctes(n_merges: int) -> str:

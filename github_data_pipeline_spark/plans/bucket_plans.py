@@ -15,8 +15,8 @@ files are bucket-sorted).
 ``tests/test_bucketing.py`` proves the exchange-free plan shape in a
 unit test; this entry makes the claim ORACLE-SCORED, the way
 ``zorder_clustering_stats`` did for the other half of the layout
-story: the Spark side reads the bucketed tables (created once per
-(session, corpus) from the raw parquet — the write-time cost the
+story: the Spark side reads the bucketed tables (written once per
+corpus from the raw parquet — the write-time cost the
 layout trades for repeated-join savings) and joins them under an
 explicit ``MERGE`` hint (at 100 TB neither fact side is
 broadcastable; the hint pins the strategy the layout exists to
@@ -34,13 +34,13 @@ that at warehouse scale.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from .artifacts import build_once
 from .core import REGISTRY
 
 #: Bucket count for both sides — MUST match for the co-location proof
@@ -50,74 +50,57 @@ from .core import REGISTRY
 BUCKETS = 16
 
 
-def _corpus_key(sf_dir: str) -> str:
-    """Stable per-corpus identifier for session-catalog table names:
-    regenerated testdata (new mtime) gets fresh bucketed tables instead
-    of silently reusing stale ones."""
-    parts = [os.path.abspath(sf_dir)]
-    for t in ("orders", "lineitem"):
+def _bucketed_twin(
+    spark: SparkSession, sf_dir: str, table: str, bucket_col: str
+) -> str:
+    """Catalog name of ``table`` bucketed+sorted on ``bucket_col``."""
+
+    def write(tmp: str) -> None:
+        # the explicit path makes the scratch table EXTERNAL, so
+        # dropping it keeps the files
+        scratch = f"{table}_bkt_build"
         try:
-            parts.append(
-                str(os.stat(os.path.join(sf_dir, f"{t}.parquet")).st_mtime_ns)
+            (
+                load_table(spark, sf_dir, table)
+                .write.bucketBy(BUCKETS, bucket_col)
+                .sortBy(bucket_col)
+                .option("path", tmp)
+                .saveAsTable(scratch)
             )
-        except OSError:
-            parts.append("0")
-    return hashlib.md5(":".join(parts).encode()).hexdigest()[:12]
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {scratch}")
+
+    loc = build_once(
+        sf_dir, f"{table}_bkt", (table,), f"{bucket_col}:{BUCKETS}", write
+    )
+    name = f"{table}_bkt_{os.path.basename(loc)}"
+    if not spark.catalog.tableExists(name):
+        ddl = load_table(spark, sf_dir, table).schema.toDDL()
+        spark.sql(
+            f"CREATE TABLE {name} ({ddl}) USING PARQUET "
+            f"CLUSTERED BY ({bucket_col}) "
+            f"SORTED BY ({bucket_col}) INTO {BUCKETS} BUCKETS "
+            f"LOCATION '{loc}'"
+        )
+    return name
 
 
 def ensure_bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Create (once per session+corpus) the bucketed twins of orders and
+    """Create (once per corpus) the bucketed twins of orders and
     lineitem, both bucketed+sorted on the order key with :data:`BUCKETS`
-    buckets, and return their catalog names.
+    buckets, register them in the session catalog and return their
+    catalog names.
 
     This is the write-time half of the layout trade: one full shuffle
-    each at CREATE time buys every later key-join ZERO exchanges. The
-    catalog check makes re-invocation free within a session; a new
-    session re-creates them (the in-memory catalog does not persist),
-    which is exactly the once-per-warehouse-build cost the pattern
-    amortizes in production."""
-    import shutil
-
-    key = _corpus_key(sf_dir)
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    names = []
-    for table, bucket_col in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        name = f"{table}_bkt_{key}"
-        if not spark.catalog.tableExists(name):
-            loc = os.path.join(warehouse, name)
-            if os.path.exists(os.path.join(loc, "_SUCCESS")):
-                # A PREVIOUS session already paid the bucketed write
-                # (the in-memory catalog forgets, the warehouse dir
-                # does not): re-register the committed files with the
-                # same bucket spec — the metadata, not the data, is
-                # what proves co-location to the planner.
-                ddl = load_table(spark, sf_dir, table).schema.toDDL()
-                spark.sql(
-                    f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-                    f"CLUSTERED BY ({bucket_col}) "
-                    f"SORTED BY ({bucket_col}) INTO {BUCKETS} BUCKETS "
-                    f"LOCATION '{loc}'"
-                )
-            else:
-                # no committed marker: scrap any half-written leftover
-                # and pay the one-time bucketed shuffle write. The
-                # explicit path makes the table EXTERNAL, so a later
-                # DROP TABLE (session teardown, catalog rebuild) only
-                # forgets the metadata — the committed files survive
-                # for the re-register branch above, which is the whole
-                # point of paying the write once per warehouse build.
-                shutil.rmtree(loc, ignore_errors=True)
-                (
-                    load_table(spark, sf_dir, table)
-                    .write.bucketBy(BUCKETS, bucket_col)
-                    .sortBy(bucket_col)
-                    .option("path", loc)
-                    .saveAsTable(name)
-                )
-        names.append(name)
-    return names[0], names[1]
+    each at build time buys every later key-join ZERO exchanges. The
+    files are a build_once artifact, so a new session (whose in-memory
+    catalog has forgotten the tables) re-registers the committed files
+    with the same bucket spec instead of rewriting them — the metadata,
+    not the data, is what proves co-location to the planner."""
+    return (
+        _bucketed_twin(spark, sf_dir, "orders", "o_orderkey"),
+        _bucketed_twin(spark, sf_dir, "lineitem", "l_orderkey"),
+    )
 
 
 @REGISTRY.add(

@@ -57,6 +57,21 @@ W_STOP, W_TTR, W_LEN = 3, 2, 10
 SCORE_THRESHOLD = 13_700
 
 
+def token_features(d: DataFrame, *keys: str) -> DataFrame:
+    """``keys`` plus the integer quality features of ``d.text`` — t
+    tokens, s stopword hits, u distinct tokens, c token chars — over
+    ONE tokenization: ``toks`` is projected in its own select, and
+    Catalyst does not inline a non-cheap alias used more than once."""
+    toks = F.col("toks")
+    return d.select(*keys, T.tokens("text").alias("toks")).select(
+        *keys,
+        F.size(toks).cast("long").alias("t"),
+        T.stopword_hits(toks).cast("long").alias("s"),
+        F.size(F.array_distinct(toks)).cast("long").alias("u"),
+        T.char_count(toks).cast("long").alias("c"),
+    )
+
+
 @_add(
     "doc_quality_linear_gate",
     f"""
@@ -98,14 +113,7 @@ SCORE_THRESHOLD = 13_700
 )
 def doc_quality_linear_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents").select("source", "text"))
-    toks = T.tokens("text")
-    f = d.select(
-        "source",
-        F.size(toks).cast("long").alias("t"),
-        T.stopword_hits(toks).cast("long").alias("s"),
-        F.size(F.array_distinct(toks)).cast("long").alias("u"),
-        T.char_count(toks).cast("long").alias("c"),
-    )
+    f = token_features(d, "source")
     score = F.when(F.col("t") == 0, F.lit(0).cast("long")).otherwise(
         F.lit(W_STOP) * F.expr(f"(s * {FP_SCALE}) div t")
         + F.lit(W_TTR) * F.expr(f"(u * {FP_SCALE}) div t")
@@ -300,13 +308,7 @@ PR_THRESHOLDS = (11_000, 12_500, 13_700, 15_000, 17_000)
 )
 def classifier_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents").select("text"))
-    toks = T.tokens("text")
-    f = d.select(
-        F.size(toks).cast("long").alias("t"),
-        T.stopword_hits(toks).cast("long").alias("s"),
-        F.size(F.array_distinct(toks)).cast("long").alias("u"),
-        T.char_count(toks).cast("long").alias("c"),
-    )
+    f = token_features(d)
     score = F.when(F.col("t") == 0, F.lit(0).cast("long")).otherwise(
         F.lit(W_STOP) * F.expr(f"(s * {FP_SCALE}) div t")
         + F.lit(W_TTR) * F.expr(f"(u * {FP_SCALE}) div t")
@@ -430,13 +432,7 @@ def classifier_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = spread(load_table(spark, sf_dir, "documents").select("text"))
-    toks = T.tokens("text")
-    f = d.select(
-        F.size(toks).cast("long").alias("t"),
-        T.stopword_hits(toks).cast("long").alias("s"),
-        F.size(F.array_distinct(toks)).cast("long").alias("u"),
-        T.char_count(toks).cast("long").alias("c"),
-    )
+    f = token_features(d)
     score = F.when(F.col("t") == 0, F.lit(0).cast("long")).otherwise(
         F.lit(W_STOP) * F.expr(f"(s * {FP_SCALE}) div t")
         + F.lit(W_TTR) * F.expr(f"(u * {FP_SCALE}) div t")
@@ -590,13 +586,7 @@ def classifier_isotonic_calibration(
     from pyspark.sql import Window
 
     d = spread(load_table(spark, sf_dir, "documents").select("text"))
-    toks = T.tokens("text")
-    f = d.select(
-        F.size(toks).cast("long").alias("t"),
-        T.stopword_hits(toks).cast("long").alias("s"),
-        F.size(F.array_distinct(toks)).cast("long").alias("u"),
-        T.char_count(toks).cast("long").alias("c"),
-    )
+    f = token_features(d)
     score = F.when(F.col("t") == 0, F.lit(0).cast("long")).otherwise(
         F.lit(W_STOP) * F.expr(f"(s * {FP_SCALE}) div t")
         + F.lit(W_TTR) * F.expr(f"(u * {FP_SCALE}) div t")

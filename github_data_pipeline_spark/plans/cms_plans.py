@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..sources.tables import load_table, rows_to_dataframe, spread
+from .artifacts import build_once
 from .core import REGISTRY
 
 #: sketch geometry: D hash rows x W buckets (tiny on purpose so the
@@ -204,26 +205,17 @@ def docs_stream_artifact(spark: SparkSession, sf_dir: str) -> str:
     micro-batch is a fixed cycle of per-batch planning + state setup
     + fold with no additional claim (r12 shipped 4; re-derived per
     guide §1.4 — measure the computation the proof needs). Built once
-    per sf_dir under the artifact cache, atomic promote-by-rename."""
-    import os
-    import shutil
-
-    from .artifacts import artifact_cache_path
-
-    path = artifact_cache_path(sf_dir, "docs_stream2", "files2:v1")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        tmp = f"{path}.tmp.{os.getpid()}"
-        docs.repartitionByRange(2, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    per sf_dir."""
+    return build_once(
+        sf_dir,
+        "docs_stream2",
+        ("documents",),
+        "files2:v1",
+        lambda tmp: load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .repartitionByRange(2, "doc_id")
+        .write.parquet(tmp),
+    )
 
 
 def _batch_cells(df: DataFrame) -> DataFrame:

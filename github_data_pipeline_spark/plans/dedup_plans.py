@@ -60,7 +60,8 @@ from ..operators.neardup import (
     minhash_signatures_sql,
     shingle_sets_sql,
 )
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, read_parquet_cached_schema, spread
+from .artifacts import build_once
 from .core import REGISTRY
 
 _add = REGISTRY.add
@@ -680,36 +681,18 @@ def verified_pair_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists this manifest next to the MinHash signature table instead
     of replaying the shingle -> posting-list -> verify pipeline per
     downstream job, and at 100 TB that artifact is tiny (pairs only,
-    no text). The cache key (plans/artifacts.artifact_cache_path)
-    carries the documents table's mtime — a regenerated sf_dir
-    invalidates it — AND the governing algorithm constants, so editing
+    no text). Keyed on the governing algorithm constants, so editing
     the Jaccard threshold or df cap cannot silently reuse a stale
-    table; writes go to a pid-suffixed temp dir promoted by atomic
-    rename, so concurrent runs race safely. Falls back to an in-memory
-    localCheckpoint when the cache root is unwritable (read-only
-    checkouts)."""
-    import os
-    import shutil
-
-    from .artifacts import artifact_cache_path
-
-    path = artifact_cache_path(
-        sf_dir, "neardup_pairs", f"jaccard4of5:dfcap{NEARDUP_DF_CAP}"
+    table."""
+    path = build_once(
+        sf_dir,
+        "neardup_pairs",
+        ("documents",),
+        f"jaccard4of5:dfcap{NEARDUP_DF_CAP}",
+        lambda tmp: neardup_jaccard_pairs(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        .write.parquet(tmp),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        pairs = neardup_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        tmp = f"{path}.tmp.{os.getpid()}"
-        try:
-            pairs.write.mode("overwrite").parquet(tmp)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                # another run promoted its copy first; ours is identical
-                shutil.rmtree(tmp, ignore_errors=True)
-        except Exception:
-            return pairs.localCheckpoint()
-    from ..sources.tables import read_parquet_cached_schema
-
     return read_parquet_cached_schema(spark, path)
 
 

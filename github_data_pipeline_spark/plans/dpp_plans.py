@@ -33,15 +33,12 @@ not the fallback literal.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import cents
 from ..sources.tables import load_table
-from .artifacts import artifact_cache_path
+from .artifacts import build_once
 from .core import REGISTRY
 
 #: the region whose nations survive the dimensional filter (ASIA = 5
@@ -51,10 +48,9 @@ DPP_REGION = "ASIA"
 
 def partitioned_fact_artifact(spark: SparkSession, sf_dir: str) -> str:
     """orders x customer -> (o_orderkey, cents, nationkey), persisted
-    partitioned BY nationkey — built once per sf_dir (same atomic
-    promote-by-rename discipline as verified_pair_artifact)."""
-    path = artifact_cache_path(sf_dir, "dpp_fact", "nationkey:v1")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    partitioned BY nationkey — built once per sf_dir."""
+
+    def write(tmp: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         cust = load_table(spark, sf_dir, "customer")
         fact = orders.join(
@@ -64,14 +60,11 @@ def partitioned_fact_artifact(spark: SparkSession, sf_dir: str) -> str:
             cents("o_totalprice").alias("price_cents"),
             F.col("c_nationkey").alias("nationkey"),
         )
-        tmp = f"{path}.tmp.{os.getpid()}"
-        fact.write.mode("overwrite").partitionBy("nationkey").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # another run promoted its identical copy first
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+        fact.write.partitionBy("nationkey").parquet(tmp)
+
+    return build_once(
+        sf_dir, "dpp_fact", ("orders", "customer"), "nationkey:v1", write
+    )
 
 
 def region_dim(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import cents
 from ..sources.tables import load_table
+from .artifacts import build_once
 from .core import REGISTRY
 
 _add = REGISTRY.add
@@ -228,45 +229,25 @@ def events_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 # counts, id checksums, integer cents, min/max timestamps. The oracle
 # computes the same profile straight off the parquet table, so ANY
 # loss in the sink -> source hop (precision, escaping, null handling,
-# timezone drift) shifts a value. The JSON copy is a per-(sf, mtime)
-# cached artifact (plans/artifacts.py) written once with an atomic
-# rename — re-running the query measures the SOURCE, and a regenerated
-# corpus invalidates the copy.
+# timezone drift) shifts a value. The JSON copy is a cached artifact
+# (plans/artifacts.build_once) — re-running the query measures the
+# SOURCE, and a regenerated events table invalidates the copy.
 
 _RT_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
 _RT_TS_DUCK = "%Y-%m-%dT%H:%M:%S.%fZ"
 
 
 def _events_json_copy(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-
-    from .artifacts import artifact_cache_path
-
-    path = artifact_cache_path(sf_dir, "events_json", extra_key=_RT_TS_FMT)
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "events")
-            .write.mode("overwrite")
-            .option("compression", "gzip")
-            .option("timestampFormat", _RT_TS_FMT)
-            .json(tmp)
-        )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        try:
-            os.replace(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            # Swallowing is only correct for the benign case: a
-            # concurrent writer won the rename and `path` now exists.
-            # Any other failure (cross-device cache mount, permissions)
-            # must surface HERE, not as a confusing read error at the
-            # subsequent spark.read.json far from the cause.
-            if not os.path.isdir(path):
-                raise
-    return path
+    return build_once(
+        sf_dir,
+        "events_json",
+        ("events",),
+        _RT_TS_FMT,
+        lambda tmp: load_table(spark, sf_dir, "events")
+        .write.option("compression", "gzip")
+        .option("timestampFormat", _RT_TS_FMT)
+        .json(tmp),
+    )
 
 
 @REGISTRY.add(
@@ -296,7 +277,7 @@ def _events_json_copy(spark: SparkSession, sf_dir: str) -> str:
     "file this pipeline wrote itself must parse completely, and the "
     "permissive+quarantine path for FOREIGN json stays covered by the "
     "catalog tests. Scale: the JSON copy is written once per corpus "
-    "(atomic-rename artifact); both sides are one scan + one tiny "
+    "(a build_once artifact); both sides are one scan + one tiny "
     "aggregation.",
     tags=("source", "sink", "json", "timestamp"),
 )

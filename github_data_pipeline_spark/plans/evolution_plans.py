@@ -31,14 +31,13 @@ handled at read time, no rewrite.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import cents_of
 from ..sources.tables import load_table
-from .artifacts import artifact_cache_path
+from .artifacts import build_once
 from .core import REGISTRY
 
 #: channel assignment for the NEW generation (odd orderkeys), derived
@@ -58,24 +57,18 @@ def _channel_col():
 def orders_two_generations(spark: SparkSession, sf_dir: str) -> str:
     """Orders split into two schema generations under the artifact
     cache: ``gen1/`` (even orderkeys, NO o_channel column) and
-    ``gen2/`` (odd orderkeys, WITH o_channel). Built once per sf_dir,
-    atomic promote-by-rename of the parent directory."""
-    path = artifact_cache_path(sf_dir, "orders_two_gens", "gens:v1")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    ``gen2/`` (odd orderkeys, WITH o_channel). Built once per sf_dir."""
+
+    def write(tmp: str) -> None:
         o = load_table(spark, sf_dir, "orders")
-        tmp = f"{path}.tmp.{os.getpid()}"
-        o.filter(F.col("o_orderkey") % 2 == 0).write.mode("overwrite").parquet(
+        o.filter(F.col("o_orderkey") % 2 == 0).write.parquet(
             os.path.join(tmp, "gen1")
         )
         o.filter(F.col("o_orderkey") % 2 == 1).withColumn(
             "o_channel", _channel_col()
-        ).write.mode("overwrite").parquet(os.path.join(tmp, "gen2"))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+        ).write.parquet(os.path.join(tmp, "gen2"))
+
+    return build_once(sf_dir, "orders_two_gens", ("orders",), "gens:v1", write)
 
 
 @REGISTRY.add(

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import cents_of
 from ..sources.tables import load_table, rows_to_dataframe
+from .artifacts import build_once
 from .core import REGISTRY
 from .preference_plans import _bt_oracle, bt_from_user_type_sums
 
@@ -51,24 +52,17 @@ def events_stream_artifact(spark: SparkSession, sf_dir: str) -> str:
     (r12 shipped 4; re-derived per guide §1.4). Only the columns the
     gate needs are kept, which also pins a stable stream schema
     regardless of the fixture's ts physical type. Built once per
-    sf_dir, atomic promote-by-rename."""
-    import os
-    import shutil
-
-    from .artifacts import artifact_cache_path
-
-    path = artifact_cache_path(sf_dir, "events_stream2", "files2:v1")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        tmp = f"{path}.tmp.{os.getpid()}"
-        ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    sf_dir."""
+    return build_once(
+        sf_dir,
+        "events_stream2",
+        ("events",),
+        "files2:v1",
+        lambda tmp: load_table(spark, sf_dir, "events")
+        .select("event_id", "user_id", "event_type", "value")
+        .repartitionByRange(2, "event_id")
+        .write.parquet(tmp),
+    )
 
 
 @REGISTRY.add(

@@ -383,32 +383,22 @@ def events_halves_artifact(spark: SparkSession, sf_dir: str) -> str:
     builders previously re-ran the identical filter+write Spark jobs
     on every call (~0.65 s/entry at sf0.1) and now symlink the cached
     files into each run's fresh scratch dir, while every drain still
-    computes its state from the files alone. Atomic promote-by-rename;
-    keyed on the corpus mtime like every persisted artifact."""
-    import glob
+    computes its state from the files alone."""
     import os
-    import shutil
 
     from ..sources.tables import load_table
-    from .artifacts import artifact_cache_path
+    from .artifacts import build_once
 
-    path = artifact_cache_path(sf_dir, "events_halves", "parity:v1")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        tmp = f"{path}.tmp.{os.getpid()}"
-        ev.filter(F.col("event_id") % 2 == 0).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp, "h1"))
-        ev.filter(F.col("event_id") % 2 == 1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp, "h2"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+        ev.filter(F.col("event_id") % 2 == 0).write.parquet(
+            os.path.join(tmp, "h1")
+        )
+        ev.filter(F.col("event_id") % 2 == 1).write.parquet(
+            os.path.join(tmp, "h2")
+        )
+
+    return build_once(sf_dir, "events_halves", ("events",), "parity:v1", write)
 
 
 def _link_half(halves: str, tag: str, data_dir: str) -> None:

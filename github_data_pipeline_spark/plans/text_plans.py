@@ -62,8 +62,8 @@ _POLY = (
 )
 def doc_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))
-    toks = T.tokens("text")
-    return d.select(
+    toks = F.col("toks")
+    return d.select("doc_id", T.tokens("text").alias("toks")).select(
         "doc_id",
         F.size(toks).cast("long").alias("token_cnt"),
         F.size(F.array_distinct(toks)).cast("long").alias("uniq_tokens"),
@@ -153,13 +153,13 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))
-    toks = T.tokens("text")
+    toks = F.col("toks")
     bpe = F.size(
         F.regexp_extract_all(
             F.col("text"), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0)
         )
     )
-    scored = d.select(
+    scored = d.select("source", "text", T.tokens("text").alias("toks")).select(
         "source",
         F.size(toks).alias("token_cnt"),
         T.stopword_hits(toks).alias("stop_hits"),

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..sources.tables import load_table, spread
+from .classifier_plans import token_features
 from .core import REGISTRY
 
 #: coverage fixed point: 1.0 -> 1e6
@@ -163,14 +164,7 @@ def weak_label_vote_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(
         load_table(spark, sf_dir, "documents").select("lang", "text")
     )
-    toks = T.tokens("text")
-    f = d.select(
-        "lang",
-        F.size(toks).cast("long").alias("t"),
-        T.stopword_hits(toks).cast("long").alias("s"),
-        F.size(F.array_distinct(toks)).cast("long").alias("u"),
-        T.char_count(toks).cast("long").alias("c"),
-    )
+    f = token_features(d, "lang")
     # the same vote expressions, evaluated by Spark SQL over the same
     # integer features (LF_SQL is the single source of truth)
     votes = f.select(

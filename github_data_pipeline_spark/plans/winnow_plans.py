@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.hints import broadcast_if_bounded, parquet_num_rows
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, read_parquet_cached_schema, spread
+from .artifacts import build_once
 from .core import REGISTRY
 
 _add = REGISTRY.add
@@ -100,31 +101,14 @@ def winnowed_fp_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominate the family's cost, and a real pipeline persists the
     fingerprint table next to the corpus instead of re-hashing it per
     downstream job (the verified_pair_artifact pattern,
-    plans/dedup_plans.py). The cache key carries the documents mtime
-    and the governing constants (k, w), so a regenerated corpus or an
-    edited parameter invalidates it; writes promote by atomic rename;
-    falls back to an in-memory localCheckpoint when the cache root is
-    unwritable."""
-    import os
-    import shutil
-
-    from .artifacts import artifact_cache_path
-
-    path = artifact_cache_path(sf_dir, "winnow_fps", f"k{WIN_K}w{WIN_W}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        fps = _winnowed(spark, sf_dir)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        try:
-            fps.write.mode("overwrite").parquet(tmp)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                # another run promoted its copy first; ours is identical
-                shutil.rmtree(tmp, ignore_errors=True)
-        except Exception:
-            return fps.localCheckpoint()
-    from ..sources.tables import read_parquet_cached_schema
-
+    plans/dedup_plans.py). Keyed on the governing constants (k, w)."""
+    path = build_once(
+        sf_dir,
+        "winnow_fps",
+        ("documents",),
+        f"k{WIN_K}w{WIN_W}",
+        lambda tmp: _winnowed(spark, sf_dir).write.parquet(tmp),
+    )
     return read_parquet_cached_schema(spark, path)
 
 

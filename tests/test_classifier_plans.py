@@ -136,3 +136,28 @@ def test_linear_gate_parity_property(spark):
     mix with pytest fixtures."""
     _check_linear_gate_parity.spark = spark
     _check_linear_gate_parity()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "doc_token_profile",
+        "doc_quality_by_source",
+        "weak_label_vote_report",
+        "doc_quality_linear_gate",
+        "classifier_pr_curve",
+        "classifier_roc_auc",
+    ],
+)
+def test_token_features_tokenize_once_per_scan(spark, sf_dir, name):
+    """Each scan of documents splits the text once, not once per token
+    feature. classifier_pr_curve unions one branch per threshold, each
+    with its own scan; classifier_isotonic_calibration checkpoints its
+    bins inside the builder, through the same token_features."""
+    from github_data_pipeline_spark.plans import all_plans
+
+    df = all_plans()[name].builder(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    scans = plan.count("Relation [")
+    assert scans >= 1
+    assert plan.count("split(trim(") == scans, plan

@@ -7,54 +7,7 @@ oracle can't see — error routing, plan shapes, option paths.
 
 from __future__ import annotations
 
-import os
-
-import pytest
-
 from github_data_pipeline_spark.sources.tables import load_table
-
-
-def test_events_json_copy_reraises_non_race_rename_failure(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """os.replace failing when NO concurrent writer produced the target
-    (cross-device cache mount, permissions) must surface at the copy
-    site, not as a confusing spark.read.json error far from the cause."""
-    from github_data_pipeline_spark.plans import events_plans
-
-    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path))
-
-    def boom(src, dst):
-        raise OSError("cross-device link")
-
-    monkeypatch.setattr(os, "replace", boom)
-    with pytest.raises(OSError, match="cross-device"):
-        events_plans._events_json_copy(spark, sf_dir)
-
-
-def test_events_json_copy_swallows_benign_lost_race(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """If os.replace fails but the target exists (a concurrent writer
-    won the rename), the loser must return the winner's path."""
-    from github_data_pipeline_spark.plans import events_plans
-    from github_data_pipeline_spark.plans.artifacts import artifact_cache_path
-
-    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path))
-    real_replace = os.replace
-
-    def lose_race(src, dst):
-        # the "winner" commits first, then our rename fails
-        os.makedirs(dst, exist_ok=True)
-        raise OSError("would clobber")
-
-    monkeypatch.setattr(os, "replace", lose_race)
-    path = events_plans._events_json_copy(spark, sf_dir)
-    monkeypatch.setattr(os, "replace", real_replace)
-    assert os.path.isdir(path)
-    assert path == artifact_cache_path(
-        sf_dir, "events_json", extra_key=events_plans._RT_TS_FMT
-    )
 
 
 def test_covariance_pair_form_equals_one_row_form(spark, sf_dir):
